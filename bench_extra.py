@@ -21,7 +21,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import bench  # noqa: E402  (frozen driver harness; reused, never edited)
-from ontology_mapper_spark.session import get_spark  # noqa: E402
+from ontology_mapper_spark.session import (  # noqa: E402
+    get_spark,
+    release_pipeline_cache,
+)
 
 SF_DIR = bench.SF_DIR
 CPUS = bench.CPUS
@@ -75,6 +78,8 @@ def run_suite(repeat: int, only: list[str] | None) -> None:
             fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
             times[name] = round(time.time() - t0, 3)
             spark.sparkContext.setJobDescription(None)
+            # untimed: a repeat must not read an earlier repeat's pins
+            release_pipeline_cache(spark)
         times["_total"] = round(sum(times.values()), 3)
         all_runs.append(times)
         print(json.dumps({"run": r, **times}), flush=True)

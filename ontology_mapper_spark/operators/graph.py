@@ -17,14 +17,21 @@ broadcast-able join on the (small) edge dimension.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ontology_mapper_spark.functions.curie import label_from_iri_col
+from ontology_mapper_spark.session import pin
 
 IS_A = "IS_A"
 INSTANCE_OF = "INSTANCE_OF"
+
+# Eviction depth of the graph operators' pins (session.pin): a returned
+# relation reads its operator's pin until release_pipeline_cache or until
+# this many later calls of the same operator evict it.
+_KEEP = 16
 
 
 def hierarchy_edges(onto_terms: DataFrame) -> DataFrame:
@@ -63,10 +70,10 @@ def ancestor_closure(
     # materializes once inside round 1's frontier checkpoint instead of
     # paying its own up-front job, and both consumers (hop + the
     # accumulated closure) read the cache
-    edges = (
+    edges = pin(
         onto_terms.select(F.col("iri").alias("term"), F.explode("parents"))
-        .select("term", F.col("key").alias("anc"))
-        .persist()
+        .select("term", F.col("key").alias("anc")),
+        "closure_edges", _KEEP, StorageLevel.MEMORY_AND_DISK_DESER,
     )
     hop = edges.select(F.col("term").alias("mid"), F.col("anc").alias("next_anc"))
     # the closure is accumulated as a LIST of materialized frontiers and
@@ -146,8 +153,10 @@ def pagerank_int(
     so after the annotation pass the edge side never shuffles or sorts
     again — each iteration moves only
     node-sized relations (on a cluster this is the bucketed-join
-    shape). Every third round's sums are localCheckpointed to bound
-    lineage depth."""
+    shape). Every third round's sums, except the last round's, are
+    localCheckpointed to bound lineage depth. The returned plan reads
+    the pinned edge relation; ``release_pipeline_cache`` frees it after
+    the caller's last action."""
     # Loop-invariant: each edge annotated with its source's out-degree —
     # (r*85) div (100*_od) only needs _od next to the edge, never a
     # second join in the loop. A count window over _s does it in ONE
@@ -177,10 +186,10 @@ def pagerank_int(
             .distinct()
             .select("node", F.lit(1_000_000).cast("long").alias("rank_micro"))
         )
-    e_od = (
+    e_od = pin(
         edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-        .withColumn("_od", F.count(F.lit(1)).over(Window.partitionBy("_s")))
-        .persist()
+        .withColumn("_od", F.count(F.lit(1)).over(Window.partitionBy("_s"))),
+        "pagerank_edges", _KEEP, StorageLevel.MEMORY_AND_DISK_DESER,
     )
     # node set derived from the annotated edges; NOT persisted — in the
     # sum-state shape it has exactly one consumer (the final rank
@@ -260,10 +269,9 @@ def pagerank_int(
             # costs the NEXT round one node-sized re-shuffle+sort
             # (ExistingRDD forgets partitioning), never an edge-relation
             # move — the cached e_od/nodes leaves bound every re-scan.
-            # (The LAST round's cut lands on the assembled output below
-            # instead, so the returned result is cache-independent.)
+            # The last round is never cut: the caller's action runs it.
             s = s.localCheckpoint()
-    out = (
+    return (
         nodes.join(
             s.hint("shuffle_hash"),
             "node",
@@ -276,17 +284,6 @@ def pagerank_int(
             .alias("rank_micro"),
         )
     )
-    if iterations % 3 == 0:
-        # iteration counts ending on the checkpoint cadence materialize
-        # the final assembly eagerly and drop the cached invariants, so a
-        # long-lived session doesn't accrue per-call cache entries (and
-        # repeated benchmark invocations cannot silently reuse a prior
-        # call's cache). For other iteration counts the returned plan
-        # still references the caches; they stay pinned for the session
-        # (callers may spark.catalog.clearCache()).
-        out = out.localCheckpoint()
-        e_od.unpersist(False)
-    return out
 
 
 def entity_cooccurrence(
@@ -429,8 +426,11 @@ def kg_diff(prev_triples: DataFrame, new_triples: DataFrame) -> DataFrame:
     side, so the per-task hash build is |triples| / shuffle partitions
     with no hot key, the same uniform-build argument as pagerank_int's
     loop joins — measured ~20% faster at 600k rows). Under an
-    Iceberg/bucketed layout keyed on subj the exchange is partial, and
-    AQE's skew handling covers shuffled-hash joins. No driver
+    Iceberg/bucketed layout keyed on subj the exchange is partial. The
+    per-task bound is hard: AQE's ``OptimizeSkewedJoin`` never splits a
+    FULL OUTER join, and a full-outer shuffled-hash build cannot spill,
+    so |triples| / shuffle partitions must fit in task memory (raise
+    ``spark.sql.shuffle.partitions`` with the snapshot size). No driver
     materialization at any scale."""
     milli = lambda c: F.round(F.col(c) * 1000).cast("int")  # noqa: E731
     p = prev_triples.select(
@@ -495,10 +495,13 @@ def term_graph_nodes_edges(onto_terms: DataFrame) -> tuple[DataFrame, DataFrame]
     """G4 prep — per-term graph member nodes and edges, as flat DataFrames
     keyed by ``graph_iri``. Node labels resolve as: relation-map value, else
     own labels[0], else IRI fragment (``term_graph_generator.py:51-64``)."""
-    terms = onto_terms.select(
-        "iri", F.col("labels")[0].alias("display_label"), "parents", "children",
-        "instances",
-    ).cache()
+    terms = pin(
+        onto_terms.select(
+            "iri", F.col("labels")[0].alias("display_label"), "parents",
+            "children", "instances",
+        ),
+        "term_graph", _KEEP, StorageLevel.MEMORY_AND_DISK_DESER,
+    )
     closure = ancestor_closure(onto_terms)
     # member set per graph: the term itself + all ancestors
     members = (

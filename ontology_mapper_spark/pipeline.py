@@ -3,9 +3,15 @@
 The DataFrame-lazy equivalent of the reference lifecycle
 (``/root/reference/text2term/t2t.py:31-114``, SURVEY.md §3): parse source →
 load/filter ontology → ignore-filter → mapper dispatch → min_score →
-unmapped union → tags → rounding/CURIE. Everything stays a lazy Catalyst
-plan until the caller acts on it; the ontology side crosses driver→executor
-once, as a broadcast.
+unmapped union → tags → rounding/CURIE. The returned relations are lazy
+Catalyst plans, but building them runs eager Spark jobs when a path needs a
+driver-side value: the TF-IDF ``source_idf_map`` collect (when no frozen
+IDF is passed), the inverted-plan ``limit().count()`` dispatch probe, the
+``build_target_index`` collects (when no prebuilt index is passed) and the
+prefilter ``_label_count``; ``operators.graph.entity_cooccurrence`` adds an
+eager ``localCheckpoint``. The ontology side crosses driver→executor once,
+as a broadcast. Persisted intermediates are pinned per session
+(``session.pin``); ``release_pipeline_cache`` is the single release point.
 """
 
 from __future__ import annotations
@@ -23,63 +29,18 @@ from ontology_mapper_spark.operators.tfidf import (
     tfidf_map_broadcast,
     tfidf_map_inverted_index,
 )
-from ontology_mapper_spark.session import session_cache_key
+from ontology_mapper_spark.session import pin
+from ontology_mapper_spark.session import release_pipeline_cache  # noqa: F401
 from ontology_mapper_spark.sources import terms as term_src
 from ontology_mapper_spark.sources.ontology import filter_terms_df, onto_labels_df
 
 
-# Most-recent persisted mention relation per SparkSession (keyed by id).
-# map_terms_df caches mentions for its multi-pass plan; without a hook,
-# repeated calls in one session would accumulate cached partitions forever
-# (r2 VERDICT #5). Each new call releases the previous call's cache, and
-# release_pipeline_cache() frees the last one when the caller is done.
-_ACTIVE_MENTIONS: dict[str, DataFrame] = {}
-
-# Persisted changed-url sets from incremental_kg_delta (FIFO per session):
-# the changed set is referenced by BOTH delta outputs (the page semi-join
-# and the drop relation), and without a persist each downstream action
-# re-runs the digest join AND the re-crawl extraction feeding it —
-# measured 2-4 re-extractions of the full re-crawl per incremental cycle.
-# The set itself is tiny (one url string per changed page). The FIFO cap
-# bounds session memory; an EVICTED set's outputs stay correct but
-# silently regain the replay cost — 16 concurrent un-actioned delta plans
-# per session is far beyond any real cycle pattern, and
-# release_pipeline_cache() is the deterministic release point.
-_ACTIVE_DELTAS: dict[str, list[DataFrame]] = {}
-_MAX_DELTA_CACHE = 16
-
-
-def release_pipeline_cache(spark: SparkSession | None = None) -> None:
-    """Unpersist mention relations cached by ``map_terms_df`` — call after
-    the final action on a pipeline's output (or let the next
-    ``map_terms_df`` call in the same session reclaim it automatically)."""
-    keys = [
-        k
-        for k in list(_ACTIVE_MENTIONS)
-        if spark is None or k == session_cache_key(spark)
-    ]
-    for k in keys:
-        df = _ACTIVE_MENTIONS.pop(k)
-        try:
-            df.unpersist()
-        except Exception:
-            # the entry's session may already be stopped (nothing left to
-            # unpersist); never let one dead session abort releasing the
-            # rest, and always drop the dict reference either way
-            pass
-    for k in [
-        k
-        for k in list(_ACTIVE_DELTAS)
-        if spark is None or k == session_cache_key(spark)
-    ]:
-        for df in _ACTIVE_DELTAS.pop(k):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-    # one-stop cleanup: the term-file ID path keeps its own single-slot
-    # salted-ordinal cache (sources.terms)
-    term_src.release_ordinal_cache(spark)
+# Eviction depths of the pipeline's pins (session.pin): one mention
+# relation per session, since each map_terms_df call supersedes the last;
+# 16 changed-url / affected-id sets, far beyond the concurrently
+# un-actioned delta plans of any real maintenance cycle.
+_KEEP_MENTIONS = 1
+_KEEP_DELTAS = 16
 
 
 def _label_count(labels: DataFrame) -> int:
@@ -164,16 +125,13 @@ def map_terms_df(
     # stages — re-running them per pass both doubles work and oversubscribes
     # CPUs with chained Python workers; measured 3-4x at local[32]).
     # MEMORY_AND_DISK: spills instead of recomputing at 100 TB partitions.
-    # The previous call's cache (if any) is released here so sequential
+    # The previous call's pin (if any) is released here so sequential
     # pipeline runs hold at most one cached mention relation.
     from pyspark import StorageLevel
 
-    sess = mentions.sparkSession
-    prev = _ACTIVE_MENTIONS.pop(session_cache_key(sess), None)
-    if prev is not None:
-        prev.unpersist()
-    mentions = mentions.persist(StorageLevel.MEMORY_AND_DISK)
-    _ACTIVE_MENTIONS[session_cache_key(sess)] = mentions
+    mentions = pin(
+        mentions, "mentions", _KEEP_MENTIONS, StorageLevel.MEMORY_AND_DISK
+    )
 
     to_map = post.filter_ignored(mentions)
     if cfg.mapper == Mapper.TFIDF:
@@ -635,19 +593,14 @@ def incremental_kg_delta(
     )
     # pin the changed set: both outputs reference it, and every action on
     # either would otherwise replay the digest join and the (expensive)
-    # extraction of the whole re-crawl feeding it (see _ACTIVE_DELTAS)
+    # extraction of the whole re-crawl feeding it -- measured 2-4
+    # re-extractions of the full re-crawl per cycle. The set itself is
+    # tiny (one url string per changed page).
     from pyspark import StorageLevel
 
-    changed_urls = changed_urls.persist(StorageLevel.MEMORY_AND_DISK)
-    slot = _ACTIVE_DELTAS.setdefault(
-        session_cache_key(new_pages.sparkSession), []
+    changed_urls = pin(
+        changed_urls, "deltas", _KEEP_DELTAS, StorageLevel.MEMORY_AND_DISK
     )
-    slot.append(changed_urls)
-    if len(slot) > _MAX_DELTA_CACHE:
-        try:
-            slot.pop(0).unpersist()
-        except Exception:
-            pass
     pages_to_map = new_pages.join(changed_urls, "url", "left_semi")
     fresh = construct_kg(pages_to_map, onto_terms, cfg, **kwargs)
     drop = changed_urls
@@ -1086,14 +1039,9 @@ def incremental_kg_ontology_delta(
     # semi-join and the caller's prev-triples anti-join); unpersisted,
     # each downstream action replays the probe kernel over the whole
     # corpus (same hazard as incremental_kg_delta's changed set)
-    affected = affected.persist(StorageLevel.MEMORY_AND_DISK)
-    slot = _ACTIVE_DELTAS.setdefault(session_cache_key(sess), [])
-    slot.append(affected)
-    if len(slot) > _MAX_DELTA_CACHE:
-        try:
-            slot.pop(0).unpersist()
-        except Exception:
-            pass
+    affected = pin(
+        affected, "deltas", _KEEP_DELTAS, StorageLevel.MEMORY_AND_DISK
+    )
 
     # --- re-map ONLY affected mentions against the full new ontology
     to_remap = mentions.join(affected, "source_term_id", "left_semi")

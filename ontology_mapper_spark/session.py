@@ -6,11 +6,10 @@ Arrow for pandas UDFs); tests/bench override parallelism via ``cores``.
 
 from __future__ import annotations
 
-import itertools
 import os
-import threading
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -82,44 +81,46 @@ def _prestart_python_workers(spark: SparkSession) -> None:
         pass
 
 
-_CACHE_KEY_COUNTER = itertools.count()
-_CACHE_KEY_LOCK = threading.Lock()
+# Persisted intermediates per session, by kind, oldest first: the one
+# owner of their lifetime. Keyed by the SparkSession object itself, so
+# sibling ``newSession()``s never share pins, and because the dict holds
+# the session, its ``id()`` cannot be recycled by a later session.
+_PINS: dict[SparkSession, dict[str, list[DataFrame]]] = {}
 
 
-def session_cache_key(spark: SparkSession) -> str:
-    """Stable dict key for per-session driver-side caches
-    (``pipeline._ACTIVE_MENTIONS`` / ``_ACTIVE_DELTAS`` /
-    ``sources.terms._ACTIVE_SALTED``). Two failure modes bound the
-    design: ``id(session)`` alone is NOT stable (CPython reuses
-    addresses after GC, so a dead session's slot could be inherited by
-    a new session — r4 VERDICT "what's wrong" #4), and
-    ``applicationId`` alone is NOT unique (sibling sessions from
-    ``spark.newSession()`` share one SparkContext, so two live sessions
-    would thrash each other's persisted relations through one slot).
-    The key is therefore applicationId + a monotone per-session-object
-    token, computed once and STAMPED on the session object — so it
-    stays valid (and release-matchable) even after the context stops,
-    and a recycled ``id()`` can never inherit it."""
-    key = getattr(spark, "_oms_cache_key", None)
-    if key is not None:
-        return key
-    # first-use stamping is locked: two driver threads racing here would
-    # both draw tokens and both stamp (last wins) — the loser's cache
-    # entries would then never match any later key and its persisted
-    # relations would leak for the session's life
-    with _CACHE_KEY_LOCK:
-        key = getattr(spark, "_oms_cache_key", None)
-        if key is not None:
-            return key
-        try:
-            app = str(spark.sparkContext.applicationId)
-        except Exception:
-            app = "ctx"
-        key = f"{app}:{next(_CACHE_KEY_COUNTER)}"
-        try:
-            spark._oms_cache_key = key
-        except Exception:
-            # unstampable wrapper: degrade to identity (per-call stable
-            # within the object's lifetime, the pre-r4 behavior)
-            key = f"id:{id(spark)}"
-        return key
+def pin(
+    df: DataFrame, kind: str, keep: int, level: StorageLevel
+) -> DataFrame:
+    """Persist ``df`` at ``level`` and register it under its session,
+    first unpersisting the oldest pins of ``kind`` so that at most
+    ``keep`` stay. Eviction drops only the cache: a consumer that still
+    references an evicted pin recomputes it. Eviction runs before the
+    persist because Spark caches by plan: when the new plan equals an
+    evicted one (the same mention table mapped twice), unpersisting
+    afterwards would drop the new pin's cache entry too."""
+    pins = _PINS.setdefault(df.sparkSession, {}).setdefault(kind, [])
+    while len(pins) >= keep:
+        _unpersist_quietly(pins.pop(0))
+    pins.append(df.persist(level))
+    return df
+
+
+def release_pipeline_cache(spark: SparkSession | None = None) -> None:
+    """Unpersist every relation the engine pinned for ``spark`` (every
+    session's when None) -- the single release point, to call after the
+    final action on a pipeline's or graph operator's output. Safe after
+    the session stopped."""
+    sessions = list(_PINS) if spark is None else [spark]
+    for sess in sessions:
+        for pins in _PINS.pop(sess, {}).values():
+            for df in pins:
+                _unpersist_quietly(df)
+
+
+def _unpersist_quietly(df: DataFrame) -> None:
+    # a stopped session has nothing left to unpersist; never let one dead
+    # pin abort releasing the rest
+    try:
+        df.unpersist()
+    except Exception:
+        pass

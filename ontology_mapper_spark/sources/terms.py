@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ontology_mapper_spark.session import session_cache_key
+from ontology_mapper_spark.session import pin
 
 BASE_IRI = "http://ccb.hms.harvard.edu/t2t/"
 
@@ -70,36 +70,15 @@ def mentions_from_dict(spark: SparkSession, tagged: dict) -> DataFrame:
     return spark.createDataFrame(rows, schema=MENTIONS_SCHEMA)
 
 
-# Persisted salted relations per SparkSession, FIFO. The salt assignment
-# must stay pinned for as long as the DataFrame derived from it may be
-# re-evaluated — a single most-recent slot (r3 design) evicted the
-# previous call's pin even though its returned DataFrame could still be
-# live, reintroducing the duplicate/missing-ordinal hazard for
-# nondeterministically-ordered upstreams (r3 ADVICE). Each call now keeps
-# its own slot; ``release_ordinal_cache`` frees them, and a FIFO cap
-# bounds memory for callers that never release (only a caller juggling
-# more than _SALTED_CACHE_MAX live mention DataFrames concurrently can
-# see an early eviction, and then only on a nondeterministic upstream —
-# the shipped file/CSV scans replay deterministically regardless).
-_ACTIVE_SALTED: dict[str, list[DataFrame]] = {}
-_SALTED_CACHE_MAX = 16
-
-
-def release_ordinal_cache(spark=None) -> None:
-    """Unpersist every salted-ordinal relation cached by prior
-    ``mentions_from_file`` / ``mentions_from_csv`` calls (or all sessions'
-    when ``spark`` is None). Safe to call after the session stopped."""
-    keys = [
-        k
-        for k in list(_ACTIVE_SALTED)
-        if spark is None or k == session_cache_key(spark)
-    ]
-    for k in keys:
-        for df in _ACTIVE_SALTED.pop(k):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+# Eviction depth of the salted-ordinal pins (session.pin). The salt
+# assignment must stay pinned for as long as a DataFrame derived from it
+# may be re-evaluated, so each call keeps its own pin -- a single
+# most-recent slot evicted the previous call's pin while its returned
+# DataFrame could still be live. Only a caller juggling more than this
+# many live mention DataFrames can see an early eviction, and then only
+# on a nondeterministically-ordered upstream (the shipped file/CSV scans
+# replay deterministically regardless).
+_KEEP_SALTED = 16
 
 
 def _with_stable_ordinal(
@@ -134,12 +113,12 @@ def _with_stable_ordinal(
     evaluations (without it, a nondeterministically-ordered upstream such
     as a fresh shuffle could assign different salts per subtree and
     silently emit duplicate/missing ordinals). Spark SQL's CacheManager
-    holds cached plans until an explicit unpersist, so each call releases
-    the previous call's cache (one live slot per session, same pattern as
-    pipeline._ACTIVE_MENTIONS) and ``release_ordinal_cache`` frees the
-    last one. Only executor loss (not possible in local mode) could force
-    a recompute of a pinned partition, and then only for
-    deterministic-scan inputs is the replay guaranteed identical."""
+    holds cached plans until an explicit unpersist, so the relation is
+    registered with ``session.pin`` (oldest evicted past
+    ``_KEEP_SALTED``) and ``release_pipeline_cache`` frees the rest.
+    Only executor loss (not possible in local mode) could force a
+    recompute of a pinned partition, and then only for deterministic-scan
+    inputs is the replay guaranteed identical."""
     from pyspark.sql import Window
 
     if salt_buckets <= 1:
@@ -160,15 +139,8 @@ def _with_stable_ordinal(
             ),
             F.lit(salt_buckets),
         ).cast("int"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    sess = df.sparkSession
-    slots = _ACTIVE_SALTED.setdefault(session_cache_key(sess), [])
-    slots.append(salted)
-    while len(slots) > _SALTED_CACHE_MAX:
-        try:
-            slots.pop(0).unpersist()
-        except Exception:
-            pass
+    )
+    salted = pin(salted, "salted", _KEEP_SALTED, StorageLevel.MEMORY_AND_DISK)
     w_local = Window.partitionBy(term_col, "_salt").orderBy(term_col)
     local = salted.withColumn("_local", F.row_number().over(w_local) - 1)
     # offset(term, salt) = total count of the same term in LOWER salts;

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ontology_mapper_spark.config import MappingConfig
-from ontology_mapper_spark.pipeline import construct_kg
+from ontology_mapper_spark.pipeline import construct_kg, release_pipeline_cache
 from ontology_mapper_spark.sources.pages import PAGES_SCHEMA
 
 
@@ -68,13 +68,20 @@ def stream_pages_to_triples(
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        triples = construct_kg(batch_df, onto_terms, cfg, tfidf_index=tfidf_index)
-        # epoch-scoped overwrite (Hive partition layout, epoch recovered
-        # by partition discovery): a checkpoint-replayed batch rewrites
-        # its own dir instead of appending duplicates
-        triples.write.mode("overwrite").parquet(
-            out_dir.rstrip("/") + f"/epoch={int(epoch_id)}"
-        )
+        try:
+            triples = construct_kg(
+                batch_df, onto_terms, cfg, tfidf_index=tfidf_index
+            )
+            # epoch-scoped overwrite (Hive partition layout, epoch
+            # recovered by partition discovery): a checkpoint-replayed
+            # batch rewrites its own dir instead of appending duplicates
+            triples.write.mode("overwrite").parquet(
+                out_dir.rstrip("/") + f"/epoch={int(epoch_id)}"
+            )
+        finally:
+            # foreachBatch wraps every batch in a new SparkSession object,
+            # which no caller holds: only the epoch can release its pins
+            release_pipeline_cache(batch_df.sparkSession)
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)
@@ -262,6 +269,13 @@ def stream_incremental_kg(
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
+        try:
+            _process_epoch(batch_df, int(epoch_id))
+        finally:
+            # per-batch session object: see stream_pages_to_triples
+            release_pipeline_cache(batch_df.sparkSession)
+
+    def _process_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         _check_compaction_lease(spark, triples_dir)
         # newest capture per url WITHIN the batch (a snapshot drop can
         # carry several captures of one url; mention ids are url#ordinal)

@@ -15,4 +15,14 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def cache_entries(spark):
+    """Callable counting the relations held in Spark SQL's CacheManager
+    (shared by every session of the context). Unlike
+    ``getPersistentRDDs()`` it excludes ``localCheckpoint`` RDDs, which
+    the ContextCleaner frees asynchronously."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    return lambda: cm.cachedData().size()
+
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")

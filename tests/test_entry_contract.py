@@ -53,10 +53,18 @@ def test_entry_smoke(spark):
 
 @pytest.mark.spark
 @pytest.mark.slow
-def test_all_queries_run_at_smoke_scale(spark):
+def test_all_queries_run_at_smoke_scale(spark, cache_entries):
+    """Every gate query runs, and nothing any of them pinned outlives
+    release_pipeline_cache."""
+    from ontology_mapper_spark import release_pipeline_cache
+
+    release_pipeline_cache(spark)
+    base = cache_entries()
     for name, fn in entrymod.queries().items():
         df = fn(spark, SF)
         assert df.count() >= 0, name
+    release_pipeline_cache(spark)
+    assert cache_entries() == base
 
 
 def test_gate_ckpt_dir_is_pid_scoped_and_sweeps_dead_siblings(tmp_path):

@@ -133,7 +133,8 @@ def _py_pagerank(edge_list, iterations=6):
 
 
 @pytest.mark.spark
-def test_pagerank_int_matches_python_replica(spark, onto):
+def test_pagerank_int_matches_python_replica(spark, onto, cache_entries):
+    from ontology_mapper_spark import release_pipeline_cache
     from ontology_mapper_spark.operators.graph import pagerank_int
 
     edges = hierarchy_edges(onto).select("src", "dst")
@@ -147,6 +148,18 @@ def test_pagerank_int_matches_python_replica(spark, onto):
     # roots (IS_A targets) accumulate mass: some node must exceed the
     # no-inbound floor after propagation
     assert max(got.values()) > 150_000
+
+    # an iteration count off the lineage-cut cadence: same recurrence,
+    # and its pinned edge relation is released like any other pin
+    release_pipeline_cache(spark)
+    base = cache_entries()
+    got4 = {
+        row["node"]: row["rank_micro"]
+        for row in pagerank_int(edges, iterations=4).collect()
+    }
+    assert got4 == _py_pagerank(el, iterations=4)
+    release_pipeline_cache(spark)
+    assert cache_entries() == base
 
 
 @pytest.mark.spark

@@ -366,63 +366,38 @@ def test_source_idf_pins_broadcast_plan_over_fallback(spark, onto):
         dataclasses.replace(cfg, inverted_index_min_labels=0).validate()
 
 
-def test_session_cache_key_distinct_and_stable():
-    """Two hazards bound the key design (r4 VERDICT #4 + r5 review):
-    CPython reuses id() after GC (sequential sessions could inherit a
-    slot), and applicationId alone collapses SIBLING sessions sharing
-    one SparkContext (spark.newSession()) into one slot — one session
-    would unpersist the other's live cache. The key is applicationId +
-    a per-object token stamped at first use, so it is unique per
-    session object AND stays release-matchable after the context
-    stops."""
-    from ontology_mapper_spark.session import session_cache_key
+@pytest.mark.spark
+def test_session_pins_isolated_and_release_tolerant(spark, cache_entries):
+    """Pins are keyed by the session object itself. Sibling sessions from
+    spark.newSession() share one SparkContext (and one CacheManager), yet
+    neither one's eviction nor its release may drop the other's pinned
+    relation; and a pin whose unpersist raises (its session already
+    stopped) must not abort releasing the rest."""
+    from pyspark import StorageLevel
 
-    class _Ctx:
-        def __init__(self, app):
-            self.applicationId = app
+    from ontology_mapper_spark.session import pin, release_pipeline_cache
 
-    class _Sess:
-        def __init__(self, app):
-            self.sparkContext = _Ctx(app)
+    level = StorageLevel.MEMORY_AND_DISK
+    a, b = spark.newSession(), spark.newSession()
 
-    a, b = _Sess("local-111"), _Sess("local-222")
-    ka, kb = session_cache_key(a), session_cache_key(b)
-    assert ka.startswith("local-111:") and kb.startswith("local-222:")
-    assert ka != kb
-    # stable across calls (stamped once)
-    assert session_cache_key(a) == ka
+    class _StoppedPin:
+        sparkSession = b
 
-    # SIBLING sessions sharing one context get DISTINCT keys
-    ctx = _Ctx("local-333")
-    s1, s2 = _Sess("x"), _Sess("x")
-    s1.sparkContext = ctx
-    s2.sparkContext = ctx
-    assert session_cache_key(s1) != session_cache_key(s2)
+        def persist(self, level):
+            return self
 
-    # key survives the context stopping — release after stop still
-    # matches the slots the live session created
-    class _Mortal:
-        def __init__(self):
-            self.alive = True
-
-        @property
-        def sparkContext(self):
-            if not self.alive:
-                raise RuntimeError("SparkContext was shut down")
-            return _Ctx("local-444")
-
-    m = _Mortal()
-    key_live = session_cache_key(m)
-    m.alive = False
-    assert session_cache_key(m) == key_live
-
-    # never-started context: still keyed, still stable
-    class _Dead:
-        @property
-        def sparkContext(self):
+        def unpersist(self):
             raise RuntimeError("SparkContext was shut down")
 
-    d = _Dead()
-    kd = session_cache_key(d)
-    assert kd.startswith("ctx:")
-    assert session_cache_key(d) == kd
+    base = cache_entries()
+    pin(_StoppedPin(), "stopped", 1, level)  # b's first pin: released first
+    pin(a.range(7).toDF("a"), "kind", 1, level)
+    pin(b.range(11).toDF("b"), "kind", 1, level)
+    assert cache_entries() == base + 2
+    # keep=1 evicts a's older pin, never the sibling's
+    pin(a.range(13).toDF("a"), "kind", 1, level)
+    assert cache_entries() == base + 2
+    release_pipeline_cache(a)
+    assert cache_entries() == base + 1  # b's pin survives a's release
+    release_pipeline_cache(b)  # the raising unpersist does not stop it
+    assert cache_entries() == base

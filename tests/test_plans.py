@@ -336,9 +336,9 @@ def test_pagerank_iteration_is_single_join_per_round(spark):
     # 2 iterations: below the lineage-checkpoint cadence, so the WHOLE
     # loop is one lazy plan (a checkpointed run executes eagerly and
     # truncates the inspectable plan to the post-checkpoint rounds).
-    # clearCache first: a prior call can leave the loop invariants
-    # cached (documented contract for iteration counts that don't end
-    # on a checkpoint), and re-binding them here would renumber ids.
+    # clearCache first: a prior call's loop invariants stay pinned
+    # until release_pipeline_cache, and re-binding them here would
+    # renumber ids.
     spark.catalog.clearCache()
     p = plan_str(pagerank_int(edges, iterations=2))
     tree = p.split("\n\n")[0]

@@ -172,17 +172,17 @@ def test_salted_ordinal_matches_unsalted_and_handles_hot_terms(spark):
     key = lambda d: sorted((r["source_term"], r["idx"]) for r in d.collect())
     assert key(salted) == key(unsalted)
 
-    # the internal persist is single-slot per session and releasable:
+    # the internal persist is pinned per session and releasable:
     # repeated calls must not accumulate cached relations (r3 review)
-    from ontology_mapper_spark.sources.terms import release_ordinal_cache
+    from ontology_mapper_spark import release_pipeline_cache
 
     def n_cached():
         return spark.sparkContext._jsc.getPersistentRDDs().size()
 
-    release_ordinal_cache(spark)
+    release_pipeline_cache(spark)
     base = n_cached()
     for _ in range(3):
         _with_stable_ordinal(df, "source_term", salt_buckets=16).count()
     assert n_cached() <= base + 1
-    release_ordinal_cache(spark)
+    release_pipeline_cache(spark)
     assert n_cached() == base

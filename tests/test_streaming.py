@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ontology_mapper_spark.config import MappingConfig
-from ontology_mapper_spark.pipeline import construct_kg
+from ontology_mapper_spark.pipeline import construct_kg, release_pipeline_cache
 from ontology_mapper_spark.sources.ontology import fixture_onto_terms
 from ontology_mapper_spark.sources.pages import synthesize_pages
 from ontology_mapper_spark.streaming.ingest import (
@@ -67,7 +67,7 @@ def test_first_seen_urls_stateful(spark, tmp_path):
 
 @pytest.mark.spark
 @pytest.mark.slow
-def test_stream_matches_batch(spark, tmp_path):
+def test_stream_matches_batch(spark, tmp_path, cache_entries):
     onto = fixture_onto_terms(spark).cache()
     cfg = MappingConfig(max_mappings=1)
     in_dir = str(tmp_path / "pages_in")
@@ -76,6 +76,7 @@ def test_stream_matches_batch(spark, tmp_path):
 
     pages = synthesize_pages(spark, 120).cache()
     pages.write.mode("overwrite").parquet(in_dir)
+    before = cache_entries()
 
     q = stream_pages_to_triples(spark, in_dir, out_dir, ckpt, onto, cfg)
     q.awaitTermination(120)
@@ -96,6 +97,9 @@ def test_stream_matches_batch(spark, tmp_path):
         spark.read.parquet(in_dir), onto, cfg
     ).select("subj", "pred", "obj")
     assert sorted(map(tuple, got2.collect())) == sorted(map(tuple, exp2.collect()))
+    # the epochs released their own pins; the batch runs' go here
+    release_pipeline_cache(spark)
+    assert cache_entries() == before
 
 
 @pytest.mark.spark
@@ -123,7 +127,9 @@ def test_mention_rate_watermark(spark, tmp_path):
 
 @pytest.mark.spark
 @pytest.mark.slow
-def test_stream_incremental_kg_latest_wins_and_reuse(spark, tmp_path):
+def test_stream_incremental_kg_latest_wins_and_reuse(
+    spark, tmp_path, cache_entries
+):
     """Continuous-crawl maintenance: two file drops processed as separate
     checkpointed runs (initial crawl, then a recrawl with changed content
     + new urls). The latest-wins resolution of the append-only log must
@@ -171,9 +177,13 @@ def test_stream_incremental_kg_latest_wins_and_reuse(spark, tmp_path):
         q.awaitTermination(180)
 
     drop1.coalesce(1).write.mode("append").parquet(d["in"])
+    before = cache_entries()
     run()
     drop2.coalesce(1).write.mode("append").parquet(d["in"])
     run()  # checkpointed restart: only the new file is processed
+    # every epoch releases what it pinned (each micro-batch runs under
+    # its own session wrapper, which the caller cannot release)
+    assert cache_entries() == before
 
     got = stream_current_triples(spark, d["triples"], d["touched"])
     full = construct_kg(
