@@ -45,6 +45,7 @@ from __future__ import annotations
 import math
 from collections import Counter
 from collections.abc import Iterator
+from itertools import chain
 
 import numpy as np
 import pandas as pd
@@ -85,11 +86,11 @@ LABEL_ORDER = ("iri", "is_synonym", "name")
 # (iri, is_synonym, name) — labels/synonyms are set-valued upstream
 # (sources/owl.py label/synonym set union, U2/U3), so the tuple is a key.
 # Both plans treat each row as one TF-IDF document. Duplicated rows are
-# UNSUPPORTED input, not merely redundant: the distributed postings
-# builder groups on the hashed tuple key (one document, doubled tf) while
-# the driver-side index builder enumerates each row as its own document —
-# the two builders would diverge, so upstream set-union dedup is load-
-# bearing for the plan-equivalence guarantees.
+# UNSUPPORTED input, not merely redundant: the index's Spark feeder
+# groups on the hashed tuple key (one document, doubled tf) while its
+# driver feeder enumerates each row as its own document — the two
+# feeders would diverge, so upstream set-union dedup is load-bearing for
+# the plan-equivalence guarantees.
 
 
 _COUNT_SENTINEL = "\x00__doc_count__"
@@ -102,27 +103,29 @@ def source_idf_map(
     (reference fits TfidfVectorizer on the full to_map list:
     ``tfidf_mapper.py:51``).
 
-    Physical shape, ``dedup=True`` (the high-duplication default, matching
-    the dedup-scoring plan): a JVM hash aggregate collapses the corpus to
-    (distinct term, count) — map-side partial combine, the only pass that
-    touches every mention row stays whole-stage codegen — then an
-    Arrow-batched kernel n-grams each DISTINCT term once and scales its
-    gram set by the count (identical df/n_docs to per-occurrence counting,
-    by linearity). ``dedup=False`` (near-unique mention text, where the
-    distinct aggregate would shuffle the whole fact table for no
-    reduction): a zero-shuffle per-partition kernel with a per-partition
-    memo emits (ngram, df) partials directly. Both plans feed the same
-    trigram-bounded final aggregate. Normalization + n-gramming stay in
-    Python on purpose: Spark evaluates higher-order array lambdas
-    interpreted (outside whole-stage codegen), which measured ~10x slower
-    than these kernels; the Column versions remain the SQL-oracle-parity
-    path (tfidf_map_inverted_index)."""
+    Physical shape: one Arrow-batched kernel over (source_term, cnt) rows
+    collapses each batch to its distinct terms (a pandas groupby-sum),
+    n-grams each once and scales its gram set by the count (identical
+    df/n_docs to per-occurrence counting, by linearity). ``dedup=True``
+    (the high-duplication default, matching the dedup-scoring plan) feeds
+    it a JVM hash aggregate's (distinct term, count) — map-side partial
+    combine, the only pass that touches every mention row stays
+    whole-stage codegen. ``dedup=False`` (near-unique mention text, where
+    the distinct aggregate would shuffle the whole fact table for no
+    reduction) feeds it every row with ``cnt = 1``: zero shuffle before
+    the partials. Both plans feed the same trigram-bounded final
+    aggregate. Normalization + n-gramming stay in Python on purpose:
+    Spark evaluates higher-order array lambdas interpreted (outside
+    whole-stage codegen), which measured ~10x slower than this kernel;
+    the Column versions remain the SQL-oracle-parity path
+    (tfidf_map_inverted_index)."""
 
     def df_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         df_c: Counter = Counter()
         n = 0
         for pdf in batches:
-            for term, cnt in zip(pdf["source_term"], pdf["cnt"]):
+            per_term = pdf.groupby("source_term", sort=False, dropna=False)["cnt"]
+            for term, cnt in per_term.sum().items():
                 c = int(cnt)
                 n += c
                 for g in set(
@@ -133,34 +136,13 @@ def source_idf_map(
         rows.append((_COUNT_SENTINEL, n))
         yield pd.DataFrame(rows, columns=["ngram", "df"])
 
-    def df_partials_rows(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        df_c: Counter = Counter()
-        n = 0
-        memo: dict[str, set] = {}
-        for pdf in batches:
-            for term in pdf["source_term"]:
-                n += 1
-                gs = memo.get(term)
-                if gs is None:
-                    gs = set(char_wb_ngrams_py(normalize_py(term), ngram_length))
-                    memo[term] = gs
-                df_c.update(gs)
-        rows = list(df_c.items())
-        rows.append((_COUNT_SENTINEL, n))
-        yield pd.DataFrame(rows, columns=["ngram", "df"])
-
     if dedup:
-        partials = (
-            mentions.groupBy("source_term")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .mapInPandas(df_partials, schema="ngram string, df long")
+        counted = mentions.groupBy("source_term").agg(
+            F.count(F.lit(1)).alias("cnt")
         )
     else:
-        partials = mentions.select("source_term").mapInPandas(
-            df_partials_rows, schema="ngram string, df long"
-        )
+        counted = mentions.select("source_term", F.lit(1).cast("long").alias("cnt"))
+    partials = counted.mapInPandas(df_partials, schema="ngram string, df long")
     agg = partials.groupBy("ngram").agg(F.sum("df").alias("df")).collect()
     n_docs = 0
     dfs: dict[str, int] = {}
@@ -174,8 +156,13 @@ def source_idf_map(
 
 
 class _TargetIndex:
-    """Driver-built vectorized ontology: per-ngram postings of l2-normalized
-    tf-idf weights, plus per-label iri/display arrays. Broadcast once.
+    """Driver-built vectorized ontology in CSR layout, broadcast once.
+
+    ``gram_ids`` maps each n-gram to its row; row ``i``'s posting list is
+    ``lids[indptr[i]:indptr[i + 1]]`` (label ids, ascending) with the
+    matching l2-normalized tf-idf weights in ``wts``. Rows are the grams
+    in sorted order, so two builds of one label set have one layout.
+    ``iris`` / ``displays`` are indexed by label id.
 
     ``ngram_length`` is recorded so a prebuilt index passed back into
     ``tfidf_map_broadcast`` can be validated against the call's config — a
@@ -183,75 +170,81 @@ class _TargetIndex:
     SNAPSHOT staleness is the caller's contract (rebuilding on snapshot
     change), mirroring the reference's cache-then-map flow."""
 
-    __slots__ = ("postings", "iris", "displays", "n_labels", "ngram_length")
+    __slots__ = (
+        "gram_ids", "indptr", "lids", "wts",
+        "iris", "displays", "n_labels", "ngram_length",
+    )
 
-    def __init__(
-        self,
-        labels: list[tuple[str, str, str]],
-        ngram_length: int,
-        target_idf: tuple[dict[str, float], int] | None = None,
-    ):
-        # labels: [(name, iri, display_label)] in label_id order.
-        # target_idf: optional FROZEN label-side gram model (idf map +
-        # model label count, from target_idf_map) — the ontology-delta
-        # contract: weights come from the pinned snapshot, not this label
-        # set, so unchanged labels keep bit-identical vectors across
-        # ontology versions. Grams unseen by the model take the df=0
-        # value ln(1 + n_model) + 1.
+    def __init__(self, csr: tuple, iris, displays, ngram_length: int):
+        self.gram_ids, self.indptr, self.lids, self.wts = csr
+        self.iris = iris
+        self.displays = displays
+        self.n_labels = len(iris)
         self.ngram_length = ngram_length
-        self.n_labels = len(labels)
-        self.iris = np.array([l[1] for l in labels], dtype=object)
-        self.displays = np.array([l[2] for l in labels], dtype=object)
-        tfs = [Counter(char_wb_ngrams_py(l[0], ngram_length)) for l in labels]
-        df: Counter = Counter()
-        for tf in tfs:
-            df.update(tf.keys())
-        if target_idf is None:
-            n_docs = len(tfs)
-            idf = {
-                g: math.log((1 + n_docs) / (1 + d)) + 1.0 for g, d in df.items()
-            }
-        else:
-            idf_map, n_model = target_idf
-            unseen = math.log(1.0 + n_model) + 1.0
-            idf = {g: idf_map.get(g, unseen) for g in df}
-        post: dict[str, tuple[list[int], list[float]]] = {}
-        for lid, tf in enumerate(tfs):
-            w = {g: c * idf[g] for g, c in tf.items()}
-            norm = math.sqrt(sum(v * v for v in w.values()))
-            if norm == 0.0:
-                continue
-            for g, v in w.items():
-                ids, ws = post.setdefault(g, ([], []))
-                ids.append(lid)
-                ws.append(v / norm)
-        self.postings = {
-            g: (np.asarray(ids, dtype=np.int64), np.asarray(ws, dtype=np.float64))
-            for g, (ids, ws) in post.items()
-        }
 
-    @classmethod
-    def from_arrays(
-        cls,
-        iris: "np.ndarray",
-        displays: "np.ndarray",
-        postings: dict,
-        ngram_length: int,
-    ) -> "_TargetIndex":
-        idx = cls.__new__(cls)
-        idx.ngram_length = ngram_length
-        idx.n_labels = len(iris)
-        idx.iris = iris
-        idx.displays = displays
-        idx.postings = postings
-        return idx
+
+def _assemble_csr(lid, gram, wt) -> tuple:
+    """The one posting-span builder: (label id, gram, weight) rows ->
+    ``(gram_ids, indptr, lids, wts)``. Grams are factorized to int codes
+    (a C-speed hash pass; a string sort over ~30M posting rows measured
+    minutes) with only the distinct grams sorted, rows ordered by
+    (code, label id), and spans cut from the per-code counts."""
+    lid = np.asarray(lid, dtype=np.int64)
+    codes, uniq = pd.factorize(np.asarray(gram, dtype=object), sort=True)
+    order = np.lexsort((lid, codes))
+    counts = np.bincount(codes, minlength=len(uniq))
+    return (
+        dict(zip(uniq.tolist(), range(len(uniq)))),
+        np.concatenate(([0], np.cumsum(counts))),
+        lid[order],
+        np.asarray(wt, dtype=np.float64)[order],
+    )
+
+
+def _label_postings(
+    names: list[str],
+    ngram_length: int,
+    target_idf: tuple[dict[str, float], int] | None = None,
+) -> tuple:
+    """Driver feeder: the (label id, gram, l2-normalized tf-idf weight)
+    rows of ``names`` (in label-id order) — the statistic
+    ``target_postings_df`` computes as a relation, vectorized over one
+    flat gram array. ``target_idf``: optional FROZEN label-side gram model
+    (idf map + model label count, from target_idf_map) — the
+    ontology-delta contract: weights come from the pinned snapshot, not
+    this label set, so unchanged labels keep bit-identical vectors across
+    ontology versions. Grams unseen by the model take the df=0 value
+    ln(1 + n_model) + 1."""
+    grams = [char_wb_ngrams_py(n, ngram_length) for n in names]
+    lid = np.repeat(
+        np.arange(len(grams), dtype=np.int64), [len(g) for g in grams]
+    )
+    # sorted codes: each label's norm then sums its grams in an order fixed
+    # by the label alone, so a frozen model gives it bit-identical weights
+    # in any label set
+    code, uniq = pd.factorize(
+        np.array(list(chain.from_iterable(grams)), dtype=object), sort=True
+    )
+    n_grams = max(len(uniq), 1)
+    key, tf = np.unique(lid * n_grams + code, return_counts=True)
+    lid, code = np.divmod(key, n_grams)
+    if target_idf is None:
+        df = np.bincount(code, minlength=len(uniq))
+        idf = np.log((1.0 + len(names)) / (1.0 + df)) + 1.0
+    else:
+        idf_map, n_model = target_idf
+        unseen = math.log(1.0 + n_model) + 1.0
+        idf = pd.Series(uniq).map(idf_map).fillna(unseen).to_numpy(np.float64)
+    w = tf * idf[code]
+    norm = np.sqrt(np.bincount(lid, weights=w * w, minlength=len(names)))
+    return lid, uniq[code], w / norm[lid]
 
 
 def _label_key_cols() -> tuple:
     """The 128-bit hashed label key (two independent xxhash64 columns)
     standing in for the (iri, is_synonym, name) tuple wherever a NARROW
     join/aggregation key is needed. One definition shared by the inverted
-    plan and the distributed index builder so the keys always agree."""
+    plan and the index's Spark feeder so the keys always agree."""
     return (
         F.xxhash64("iri", "is_synonym", "name").alias("lk1"),
         F.xxhash64("name", F.lit(-1640531527), "is_synonym", "iri").alias("lk2"),
@@ -264,7 +257,7 @@ def target_idf_map(
     """Freeze the label-side gram IDF model from an ontology snapshot:
     ``({ngram: ln((1+n_labels)/(1+df)) + 1}, n_labels)`` with df = number
     of labels containing the gram — exactly the statistic
-    ``target_postings_df`` / ``_TargetIndex`` compute internally. The
+    ``target_postings_df`` / ``_label_postings`` compute internally. The
     returned model is SNAPSHOT STATE for ontology-delta maintenance
     (``pipeline.incremental_kg_ontology``): score every ontology version
     against one pinned model and unchanged labels keep bit-identical
@@ -291,14 +284,15 @@ def target_idf_map(
 
 def target_postings_df(
     onto_labels: DataFrame,
+    ngram_length: int = 3,
     target_idf: tuple[dict[str, float], int] | None = None,
 ) -> DataFrame:
     """The ontology side vectorized AS A RELATION: per (label, ngram)
     l2-normalized tf-idf weight, labels identified by the hashed key pair.
     Pure DataFrame — every stage is a keyed aggregate or broadcast-idf
     join, nothing single-task. Shared by ``tfidf_map_inverted_index``
-    (joined against the mention grams) and the distributed index builder
-    (collected via Arrow into the CSR postings).
+    (joined against the mention grams) and the Spark feeder of
+    ``build_target_index`` (collected via Arrow into ``_assemble_csr``).
 
     ``target_idf``: optional frozen model (see ``target_idf_map``) — the
     computed-IDF aggregate is replaced by a broadcast literal relation,
@@ -309,7 +303,9 @@ def target_postings_df(
         lbl.select(
             "lk1",
             "lk2",
-            F.explode(char_wb_ngrams_col(F.col("name"))).alias("ngram"),
+            F.explode(char_wb_ngrams_col(F.col("name"), ngram_length)).alias(
+                "ngram"
+            ),
         )
         .groupBy("lk1", "lk2", "ngram")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -349,12 +345,13 @@ def target_postings_df(
     )
 
 
-# past this label count the driver-side Python loop (Counter per label,
-# ~200 us each) costs minutes; the distributed builder computes postings
-# as a Spark relation and assembles the CSR with Arrow + vectorized
-# pandas/numpy (~10x faster at 10^6 labels, identical structure — weights
-# may differ by ~1 ulp from JVM-vs-Python summation order, absorbed by
-# the kernel's 9dp rank rounding exactly like the cross-engine oracle)
+# past this label count the driver feeder's single-threaded n-gramming of
+# every label (plus its Row collect) gives way to the Spark feeder, which
+# computes the same (label, gram, weight) rows as a relation in parallel
+# and collects them through Arrow. Both feed _assemble_csr, so the layout
+# is identical; weights may differ by ~1 ulp from JVM-vs-Python summation
+# order, absorbed by the kernel's 9dp rank rounding exactly like the
+# cross-engine oracle
 _DISTRIBUTED_INDEX_MIN_LABELS = 100_000
 
 
@@ -378,10 +375,12 @@ def build_target_index(
     ngram_length: int = 3,
     target_idf: tuple[dict[str, float], int] | None = None,
 ) -> _TargetIndex:
-    """Build the broadcastable CSR index. Small/non-trigram dimensions
-    take the single-collect driver-side path; past
-    ``_DISTRIBUTED_INDEX_MIN_LABELS`` the postings are computed as a Spark
-    relation and assembled with Arrow + vectorized pandas/numpy. The
+    """Build the broadcastable CSR index (see ``_TargetIndex``). One
+    assembler, ``_assemble_csr``, cuts the posting spans from (label id,
+    gram, weight) rows, which come from one of two feeders: up to
+    ``_DISTRIBUTED_INDEX_MIN_LABELS`` labels the driver feeder
+    (``_label_postings``) n-grams the collected names; past it the Spark
+    feeder computes the rows as the ``target_postings_df`` relation. The
     large path pre-flights BOTH driver collects against
     spark.driver.maxResultSize BEFORE any collect runs (a mid-collect
     rejection after the full upstream has executed is the opaque failure
@@ -402,24 +401,14 @@ def build_target_index(
         .limit(lim + 1)
         .collect()
     )
-    if len(rows) <= lim or ngram_length != 3:
-        # char_wb_ngrams_col is the 3-gram oracle-parity expression; other
-        # gram sizes stay on the (slower) driver-side builder
-        if len(rows) > lim:
-            # non-trigram dimension above the probe size: full collect
-            rows = (
-                onto_labels.select(
-                    "name", "iri", "display_label", "is_synonym"
-                )
-                .orderBy(*LABEL_ORDER)
-                .collect()
-            )
-        else:
-            rows.sort(key=lambda r: (r["iri"], r["is_synonym"], r["name"]))
+    if len(rows) <= lim:
+        rows.sort(key=lambda r: (r["iri"], r["is_synonym"], r["name"]))
+        names = [r["name"] for r in rows]
         return _TargetIndex(
-            [(r["name"], r["iri"], r["display_label"]) for r in rows],
+            _assemble_csr(*_label_postings(names, ngram_length, target_idf)),
+            np.array([r["iri"] for r in rows], dtype=object),
+            np.array([r["display_label"] for r in rows], dtype=object),
             ngram_length,
-            target_idf=target_idf,
         )
     n_labels = onto_labels.count()  # dimension-scale action (large path)
     # Pre-flight: the attribute collect moves ~300 B/label and the
@@ -485,7 +474,9 @@ def _build_target_index_large(
         .orderBy(*LABEL_ORDER)
         .toPandas()
     )
-    post_pdf = target_postings_df(onto_labels, target_idf=target_idf).toPandas()
+    post_pdf = target_postings_df(
+        onto_labels, ngram_length, target_idf=target_idf
+    ).toPandas()
     key = pd.DataFrame(
         {
             "lk1": pdf["lk1"],
@@ -494,25 +485,10 @@ def _build_target_index_large(
         }
     )
     merged = post_pdf.merge(key, on=["lk1", "lk2"], how="inner")
-    # group rows by gram WITHOUT sorting the strings themselves: factorize
-    # to int codes (C-speed hash pass), sort the codes, slice by counts —
-    # a string argsort over ~30M posting rows measured minutes, this path
-    # seconds
-    codes, uniq = pd.factorize(merged["ngram"], sort=False)
-    order = np.argsort(codes, kind="stable")
-    codes_sorted = codes[order]
-    lids = merged["lid"].to_numpy()[order]
-    wts = merged["wt"].to_numpy()[order]
-    counts = np.bincount(codes_sorted, minlength=len(uniq))
-    bounds = np.concatenate(([0], np.cumsum(counts)))
-    postings = {
-        str(uniq[i]): (lids[bounds[i]:bounds[i + 1]], wts[bounds[i]:bounds[i + 1]])
-        for i in range(len(uniq))
-    }
-    return _TargetIndex.from_arrays(
+    return _TargetIndex(
+        _assemble_csr(merged["lid"], merged["ngram"], merged["wt"]),
         pdf["iri"].to_numpy(dtype=object),
         pdf["display_label"].to_numpy(dtype=object),
-        postings,
         ngram_length,
     )
 
@@ -537,9 +513,10 @@ def _score_one(
     scores = np.zeros(idx.n_labels, dtype=np.float64)
     hit = False
     for g, v in w.items():
-        p = idx.postings.get(g)
-        if p is not None:
-            scores[p[0]] += (v / norm) * p[1]
+        row = idx.gram_ids.get(g)
+        if row is not None:
+            lo, hi = idx.indptr[row], idx.indptr[row + 1]
+            scores[idx.lids[lo:hi]] += (v / norm) * idx.wts[lo:hi]
             hit = True
     if not hit:
         return []
@@ -788,7 +765,9 @@ def tfidf_map_inverted_index(
             "source_term_id",
             "source_term",
             "_w",
-            F.explode(char_wb_ngrams_col(F.col("norm"))).alias("ngram"),
+            F.explode(char_wb_ngrams_col(F.col("norm"), cfg.ngram_length)).alias(
+                "ngram"
+            ),
         )
         .groupBy("source_term_id", "source_term", "_w", "ngram")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -845,7 +824,7 @@ def tfidf_map_inverted_index(
         *_label_key_cols(), "iri", "is_synonym", "name", "display_label"
     )
     n_tgt_df = onto_labels.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
-    tgt_vec = target_postings_df(onto_labels, target_idf=target_idf)
+    tgt_vec = target_postings_df(onto_labels, cfg.ngram_length, target_idf)
     if cfg.stop_ngram_df_fraction is not None:
         # skew valve: hot n-grams (df above the cutoff) dominate join
         # fan-out while contributing ~zero score mass (IDF -> ln(1)+1 ~ 1,
@@ -932,7 +911,7 @@ def tfidf_map_inverted_index(
     )
 
 
-_INDEX_CACHE_VERSION = 1
+_INDEX_CACHE_VERSION = 2
 
 
 def save_target_index(idx: _TargetIndex, path: str) -> None:
@@ -940,7 +919,9 @@ def save_target_index(idx: _TargetIndex, path: str) -> None:
     of the reference's ontology pickle cache (``t2t.py:163-165``): a
     deployment builds the index once per ontology snapshot (seconds to
     minutes at SNOMED scale) and every subsequent job loads it in seconds.
-    Plain pickle of numpy arrays; the version field guards layout drift.
+    Plain pickle of the CSR layout (the ``gram_ids`` map plus the flat
+    ``indptr`` / ``lids`` / ``wts`` arrays) and the label arrays; the
+    version field guards layout drift.
     ``path`` is a DRIVER-LOCAL file (the index is a driver-side artifact,
     broadcast from there) — on a cluster, stage it via an object store /
     ``spark-submit --files`` and load from the driver's local copy."""
@@ -951,7 +932,7 @@ def save_target_index(idx: _TargetIndex, path: str) -> None:
         "ngram_length": idx.ngram_length,
         "iris": idx.iris,
         "displays": idx.displays,
-        "postings": idx.postings,
+        "csr": (idx.gram_ids, idx.indptr, idx.lids, idx.wts),
     }
     with open(path, "wb") as f:
         pickle.dump(payload, f, protocol=5)
@@ -968,8 +949,8 @@ def load_target_index(path: str) -> _TargetIndex:
             f"{payload.get('version')!r}; this engine expects "
             f"{_INDEX_CACHE_VERSION} — rebuild with build_target_index"
         )
-    return _TargetIndex.from_arrays(
-        payload["iris"], payload["displays"], payload["postings"],
+    return _TargetIndex(
+        payload["csr"], payload["iris"], payload["displays"],
         payload["ngram_length"],
     )
 

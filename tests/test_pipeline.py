@@ -250,16 +250,16 @@ def test_map_terms_accepts_file_paths(spark, tmp_path):
 
 
 @pytest.mark.spark
-def test_sequential_runs_do_not_accumulate_cache(spark, onto):
+def test_sequential_runs_do_not_accumulate_cache(spark, onto, cache_entries):
     """r2 VERDICT #5: map_terms_df persists the mention relation; repeated
-    calls in one session must not accumulate cached partitions. Each call
+    calls in one session must not accumulate cached relations. Each call
     reclaims the previous call's cache, and release_pipeline_cache() frees
-    the last one."""
+    the last one. Counted in the CacheManager, where the ``onto``
+    fixture's lazy ``.cache()`` is already registered before the
+    baseline, however many tests ran first."""
     from ontology_mapper_spark.pipeline import release_pipeline_cache
 
-    def n_cached():
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
-
+    n_cached = cache_entries
     release_pipeline_cache(spark)
     base = n_cached()
     for _ in range(3):

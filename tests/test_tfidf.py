@@ -115,8 +115,12 @@ def test_inverted_index_matches_oracle_defaults(spark):
         MappingConfig(term_type="property"),  # simple_tests.py:117-136
         MappingConfig(term_type="any", excl_deprecated=True),
         MappingConfig(base_iris=("http://purl.obolibrary.org/obo/HP",)),
+        MappingConfig(min_score=0.0, max_mappings=5, ngram_length=2),
     ],
-    ids=["minscore06", "all_cands", "minscore099", "property", "any_nodepr", "hp_only"],
+    ids=[
+        "minscore06", "all_cands", "minscore099", "property", "any_nodepr",
+        "hp_only", "bigram",
+    ],
 )
 def test_both_impls_match_oracle_config_matrix(spark, cfg):
     _assert_matches_oracle(spark, cfg, tfidf_map_broadcast)
@@ -145,11 +149,24 @@ def test_high_threshold_yields_exact_match_only(spark):
 
 @pytest.mark.spark
 def test_distributed_index_builder_equivalent(spark, monkeypatch):
-    """The Arrow/relational index builder (large-dimension path) must
-    produce an index that maps identically to the driver-side Python
-    builder at the engine's 9dp precision (weights can differ ~1 ulp from
-    JVM-vs-Python summation order)."""
+    """Both feeders of the one CSR assembler — the driver feeder (small
+    dimensions) and the Spark feeder (past _DISTRIBUTED_INDEX_MIN_LABELS)
+    — must build the same layout: the same gram -> row map, spans and
+    label ids, with weights within 1e-12 (JVM-vs-Python summation order).
+    The driver feeder's weights must equal the oracle's l2 tf-idf vectors.
+    Checked with the self-fit IDF and with a frozen target_idf_map model
+    fit on a subset (so some grams are unseen by it); the self-fit
+    indexes must also map identically at the engine's 9dp precision."""
+    import math
+
+    import numpy as np
+
     from ontology_mapper_spark.operators import tfidf as t
+    from ontology_mapper_spark.oracle.tfidf_oracle import (
+        _idf,
+        _l2_tfidf,
+        _tf_vectors,
+    )
     from ontology_mapper_spark.sources.ontology import (
         filter_terms_df,
         fixture_onto_terms,
@@ -163,16 +180,39 @@ def test_distributed_index_builder_equivalent(spark, monkeypatch):
     labels = onto_labels_df(
         filter_terms_df(fixture_onto_terms(spark), term_type="class")
     )
+    names = [r["name"] for r in labels.orderBy(*t.LABEL_ORDER).collect()]
+    tfs = _tf_vectors(names, 3)
+    idf_map, n_model = frozen = t.target_idf_map(
+        labels.filter(~F.col("is_synonym")), 3
+    )
+    unseen = math.log(1.0 + n_model) + 1.0
+    assert any(g not in idf_map for tf in tfs for g in tf)
+
+    def build_both(target_idf, idf):
+        idx_py = t.build_target_index(labels, target_idf=target_idf)
+        with monkeypatch.context() as m:
+            m.setattr(t, "_DISTRIBUTED_INDEX_MIN_LABELS", 1)
+            idx_dist = t.build_target_index(labels, target_idf=target_idf)
+        assert idx_dist.n_labels == idx_py.n_labels == len(names)
+        assert list(idx_dist.iris) == list(idx_py.iris)
+        assert idx_dist.gram_ids == idx_py.gram_ids
+        assert np.array_equal(idx_dist.indptr, idx_py.indptr)
+        assert np.array_equal(idx_dist.lids, idx_py.lids)
+        np.testing.assert_allclose(idx_dist.wts, idx_py.wts, rtol=0, atol=1e-12)
+        vecs = [_l2_tfidf(tf, idf) for tf in tfs]
+        assert len(idx_py.lids) == sum(map(len, vecs))
+        for g, row in idx_py.gram_ids.items():
+            lo, hi = idx_py.indptr[row], idx_py.indptr[row + 1]
+            for lid, w in zip(idx_py.lids[lo:hi], idx_py.wts[lo:hi]):
+                assert abs(vecs[lid][g] - w) < 1e-12, (g, lid)
+        return idx_py, idx_dist
+
+    build_both(frozen, {g: idf_map.get(g, unseen) for tf in tfs for g in tf})
+    idx_py, idx_dist = build_both(None, _idf(tfs))
     mentions = detect_mentions(synthesize_pages(spark, 40)).select(
         "source_term_id", "source_term"
     )
     cfg = MappingConfig()
-    idx_py = t.build_target_index(labels)  # below threshold -> Python loop
-    monkeypatch.setattr(t, "_DISTRIBUTED_INDEX_MIN_LABELS", 1)
-    idx_dist = t.build_target_index(labels)
-    assert idx_dist.n_labels == idx_py.n_labels
-    assert list(idx_dist.iris) == list(idx_py.iris)
-    assert set(idx_dist.postings) == set(idx_py.postings)
     a = t.tfidf_map_broadcast(mentions, labels, cfg, target_index=idx_py)
     b = t.tfidf_map_broadcast(mentions, labels, cfg, target_index=idx_dist)
     r9 = lambda df: sorted(
