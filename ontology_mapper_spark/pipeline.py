@@ -6,17 +6,21 @@ load/filter ontology → ignore-filter → mapper dispatch → min_score →
 unmapped union → tags → rounding/CURIE. The returned relations are lazy
 Catalyst plans, but building them runs eager Spark jobs when a path needs a
 driver-side value: the TF-IDF ``source_idf_map`` collect (when no frozen
-IDF is passed), the inverted-plan ``limit().count()`` dispatch probe, the
-``build_target_index`` collects (when no prebuilt index is passed) and the
-prefilter ``_label_count``; ``operators.graph.entity_cooccurrence`` adds an
-eager ``localCheckpoint``. The ontology side crosses driver→executor once,
+IDF is passed), the limit-bounded label probes (``_has_labels``: the
+inverted-plan fallback, the syntactic prefilter and the release valve's
+dimension term) and the ``build_target_index`` collects (when no prebuilt
+index is passed); ``operators.graph.entity_cooccurrence`` adds an eager
+``localCheckpoint``. The ontology side crosses driver→executor once,
 as a broadcast. Persisted intermediates are pinned per session
 (``session.pin``); ``release_pipeline_cache`` is the single release point.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import dataclasses
+
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ontology_mapper_spark.config import Mapper, MappingConfig
@@ -26,6 +30,7 @@ from ontology_mapper_spark.operators.syntactic import (
     syntactic_map_prefiltered,
 )
 from ontology_mapper_spark.operators.tfidf import (
+    build_target_index,
     tfidf_map_broadcast,
     tfidf_map_inverted_index,
 )
@@ -33,6 +38,7 @@ from ontology_mapper_spark.session import pin
 from ontology_mapper_spark.session import release_pipeline_cache  # noqa: F401
 from ontology_mapper_spark.sources import terms as term_src
 from ontology_mapper_spark.sources.ontology import filter_terms_df, onto_labels_df
+from ontology_mapper_spark.sources.pages import detect_mentions, extract_text
 
 
 # Eviction depths of the pipeline's pins (session.pin): one mention
@@ -43,11 +49,12 @@ _KEEP_MENTIONS = 1
 _KEEP_DELTAS = 16
 
 
-def _label_count(labels: DataFrame) -> int:
-    """Dimension-side cardinality used only for the prefilter dispatch —
-    the label table is broadcast-sized by design, so this count is a
-    metadata-scale action, never a pass over fact data."""
-    return labels.count()
+def _has_labels(labels: DataFrame, n: int) -> bool:
+    """Whether the label table holds at least ``n`` rows — the size probe
+    of every dimension-dependent dispatch. ``limit(n)`` bounds the action
+    to n rows, so a SNOMED/UMLS-scale dimension costs the same as a small
+    one; ``n=0`` is always true."""
+    return labels.limit(n).count() >= n
 
 
 def build_pipeline_index(
@@ -67,8 +74,6 @@ def build_pipeline_index(
     (``operators.tfidf.target_idf_map``) — required for ontology-delta
     maintenance (``incremental_kg_ontology``), where every snapshot
     version must score against one pinned model."""
-    from ontology_mapper_spark.operators.tfidf import build_target_index
-
     cfg = cfg or MappingConfig()
     onto = filter_terms_df(
         onto_terms, cfg.base_iris, cfg.excl_deprecated, cfg.term_type
@@ -114,6 +119,21 @@ def map_terms_df(
     the join itself (it can't prove right-side key uniqueness)."""
     cfg = cfg or MappingConfig()
     cfg.validate()
+    if (
+        cfg.mapper == Mapper.TFIDF
+        and cfg.use_inverted_index
+        and tfidf_index is not None
+    ):
+        # the broadcast-kernel CSR index has no inverted-plan counterpart —
+        # silently ignoring it would skew per-call economics the caller
+        # paid for; postings for this plan are a relation, rebuilt per call
+        # (a frozen label model threads through as tfidf_target_idf).
+        # Checked before anything is pinned.
+        raise ValueError(
+            "map_terms_df: tfidf_index (broadcast-kernel CSR) "
+            "cannot be honored with use_inverted_index=True — "
+            "drop the index, or unset use_inverted_index"
+        )
     onto = filter_terms_df(
         onto_terms, cfg.base_iris, cfg.excl_deprecated, cfg.term_type
     )
@@ -127,8 +147,6 @@ def map_terms_df(
     # MEMORY_AND_DISK: spills instead of recomputing at 100 TB partitions.
     # The previous call's pin (if any) is released here so sequential
     # pipeline runs hold at most one cached mention relation.
-    from pyspark import StorageLevel
-
     mentions = pin(
         mentions, "mentions", _KEEP_MENTIONS, StorageLevel.MEMORY_AND_DISK
     )
@@ -136,40 +154,26 @@ def map_terms_df(
     to_map = post.filter_ignored(mentions)
     if cfg.mapper == Mapper.TFIDF:
         # a prebuilt index proves the ontology is broadcast-sized; a
-        # caller-supplied whole-corpus IDF pins the AUTO-dispatch to the
+        # caller-supplied frozen model pins the AUTO-dispatch to the
         # broadcast plan too (the artifacts were built for the kernel; an
         # explicit use_inverted_index=True instead THREADS the frozen
-        # source model through — see below — so the bucketed==unbucketed
-        # and incremental==rebuild contracts hold on either plan).
+        # models through, so the bucketed==unbucketed and
+        # incremental==rebuild contracts hold on either plan).
         # Otherwise auto-fall back to the pure-DataFrame inverted-
         # index plan past the label count where the index outgrows
         # driver/executor MEMORY (~300 B/name; see the r4 measurement in
         # config.inverted_index_min_labels — the kernel beats the inverted
         # plan by ~30x core-time at every dimension that fits). The probe
-        # is a limit-bounded count — reads at most threshold rows, so a
-        # SNOMED/UMLS-scale dimension costs the same as a small one; it IS
-        # an eager dimension-scale action (like the prefilter dispatch),
-        # disabled via inverted_index_min_labels=None.
+        # is an eager dimension-scale action, disabled via
+        # inverted_index_min_labels=None.
         use_inverted = cfg.use_inverted_index or (
             tfidf_index is None
             and tfidf_source_idf is None
             and tfidf_target_idf is None
             and cfg.inverted_index_min_labels is not None
-            and labels.limit(cfg.inverted_index_min_labels).count()
-            >= cfg.inverted_index_min_labels
+            and _has_labels(labels, cfg.inverted_index_min_labels)
         )
         if use_inverted:
-            if tfidf_index is not None:
-                # the broadcast-kernel CSR index has no inverted-plan
-                # counterpart — silently ignoring it would skew per-call
-                # economics the caller paid for; postings for this plan
-                # are a relation, rebuilt per call (or pass target_idf
-                # via the operator directly)
-                raise ValueError(
-                    "map_terms_df: tfidf_index (broadcast-kernel CSR) "
-                    "cannot be honored with use_inverted_index=True — "
-                    "drop the index, or unset use_inverted_index"
-                )
             # the frozen whole-corpus source model MUST thread through:
             # incremental/streaming maintenance requires fresh and reused
             # triples to score on one model, and config directs >4M-label
@@ -185,10 +189,6 @@ def map_terms_df(
                 # fold it into the kernel index here (the caller is an
                 # ontology-release maintenance path that must score every
                 # snapshot version against one pinned model)
-                from ontology_mapper_spark.operators.tfidf import (
-                    build_target_index,
-                )
-
                 tfidf_index = build_target_index(
                     labels, cfg.ngram_length, target_idf=tfidf_target_idf
                 )
@@ -214,7 +214,7 @@ def map_terms_df(
                 apikey=cfg.bioportal_apikey,
                 min_interval_sec=cfg.api_min_interval_sec,
             )
-    elif cfg.candidate_prefilter and _label_count(labels) >= cfg.prefilter_min_labels:
+    elif cfg.candidate_prefilter and _has_labels(labels, cfg.prefilter_min_labels):
         # scale path (round-1 judge note #2): the faithful nested loop is
         # O(|distinct mentions| x |names|) — at EFO scale (75k names) the
         # TF-IDF index generates candidates and only those pairs are
@@ -299,18 +299,6 @@ def construct_kg(
     ``dedup_pages``: Common-Crawl snapshots recrawl URLs — keep only the
     newest capture per url (window max on warc_ts), so re-ingesting a later
     snapshot cannot double-emit mention ids (they are url#ordinal)."""
-    from pyspark.sql import Window
-
-    from ontology_mapper_spark.sources.pages import detect_mentions, extract_text
-
-    import dataclasses
-
-    cfg = cfg or MappingConfig()
-    if cfg.dedup_scoring is None:
-        # web corpora repeat the same mention strings across pages by
-        # construction — score each distinct string once cluster-wide and
-        # broadcast the candidates back (see MappingConfig.dedup_scoring)
-        cfg = dataclasses.replace(cfg, dedup_scoring=True)
     if dedup_pages:
         w = Window.partitionBy("url").orderBy(F.desc("warc_ts"))
         pages = (
@@ -320,19 +308,12 @@ def construct_kg(
         )
     if reextract:
         pages = extract_text(pages)
-    mentions = detect_mentions(pages, langs=langs)
-    mappings = map_terms_df(
-        mentions.select("source_term_id", "source_term", "tags"),
-        onto_terms,
-        cfg,
+    return construct_kg_from_mentions(
+        detect_mentions(pages, langs=langs), onto_terms, cfg,
         tfidf_source_idf=tfidf_source_idf,
-        # detect_mentions emits a null-literal tags column — the tags
-        # attachment join would be pure shuffle waste here
-        tags_absent=True,
         tfidf_index=tfidf_index,
         tfidf_target_idf=tfidf_target_idf,
     )
-    return mappings_to_triples(mappings)
 
 
 def construct_kg_from_mentions(
@@ -349,21 +330,22 @@ def construct_kg_from_mentions(
     once per crawl cycle and reuses the table across ontology releases,
     scoring-config sweeps, and re-linking runs, skipping the
     extract+detect scan over the page payload (orders of magnitude wider
-    than the mention projection at web scale). Row-identical to
-    ``construct_kg`` over the pages that produced the table (pinned by
-    test)."""
-    import dataclasses
-
+    than the mention projection at web scale). ``construct_kg`` is this
+    function over ``detect_mentions`` of its pages, so the two are
+    row-identical on the pages that produced the table (pinned by test)."""
     cfg = cfg or MappingConfig()
     if cfg.dedup_scoring is None:
-        # same default as construct_kg — one cluster-wide score per
-        # distinct mention string
+        # web corpora repeat the same mention strings across pages by
+        # construction — score each distinct string once cluster-wide and
+        # broadcast the candidates back (see MappingConfig.dedup_scoring)
         cfg = dataclasses.replace(cfg, dedup_scoring=True)
     mapped = map_terms_df(
         mentions.select("source_term_id", "source_term", "tags"),
         onto_terms,
         cfg,
         tfidf_source_idf=tfidf_source_idf,
+        # detect_mentions emits a null-literal tags column — the tags
+        # attachment join would be pure shuffle waste here
         tags_absent=True,
         tfidf_index=tfidf_index,
         tfidf_target_idf=tfidf_target_idf,
@@ -596,8 +578,6 @@ def incremental_kg_delta(
     # extraction of the whole re-crawl feeding it -- measured 2-4
     # re-extractions of the full re-crawl per cycle. The set itself is
     # tiny (one url string per changed page).
-    from pyspark import StorageLevel
-
     changed_urls = pin(
         changed_urls, "deltas", _KEEP_DELTAS, StorageLevel.MEMORY_AND_DISK
     )
@@ -647,9 +627,11 @@ def _onto_release_cfg(
     maintenance entry points (``incremental_kg_ontology`` and its CDC
     form). Centralized so BOTH sides of the regime valve — including the
     dimension-size early dispatch that never reaches the delta call —
-    reject invalid configurations with the identical error."""
-    import dataclasses
-
+    reject invalid configurations with the identical error and run the
+    identical plan. The plan itself (kernel or inverted TF-IDF, index
+    build, frozen-model folding) is chosen by ``map_terms_df``; this only
+    sets the two defaults both legs share: ``dedup_scoring`` as in
+    ``construct_kg_from_mentions``, and the exact syntactic plan."""
     cfg = cfg or MappingConfig()
     if cfg.mapper in (Mapper.ZOOMA, Mapper.BIOPORTAL):
         # before validate(): this is a structural rejection (no transport
@@ -671,75 +653,36 @@ def _onto_release_cfg(
             "triple reuse is only valid when fresh and reused rows score "
             "on the identical model pair that produced prev_triples"
         )
-    if cfg.dedup_scoring is None:
-        # same default as construct_kg (BOTH mappers — the remap must run
-        # the identical plan a full construct_kg rebuild would)
-        cfg = dataclasses.replace(cfg, dedup_scoring=True)
-    return cfg
+    # dedup_scoring: same default as construct_kg_from_mentions (BOTH
+    # mappers — the remap must run the identical plan a full rebuild
+    # would). candidate_prefilter=False pins the EXACT syntactic plan: the
+    # TF-IDF-prefiltered variant's candidate set depends on IDF fitted
+    # over its INPUT slice, so a remap over only the affected mentions
+    # could admit different candidates than a full-corpus run — the exact
+    # broadcast plan is per-pair pure, which is what the reuse proof
+    # requires. The TF-IDF mapper ignores the flag.
+    return dataclasses.replace(
+        cfg,
+        dedup_scoring=True if cfg.dedup_scoring is None else cfg.dedup_scoring,
+        candidate_prefilter=False,
+    )
 
 
-def _onto_release_rebuild(
+def _corpus_mentions(
     pages: DataFrame,
-    new_onto_terms: DataFrame,
-    cfg: MappingConfig,
-    tfidf_source_idf,
-    tfidf_target_idf,
-    tfidf_new_index,
     mentions_table: DataFrame | None,
     langs: tuple,
     reextract: bool,
 ) -> DataFrame:
-    """The valve's full-rebuild leg: ``construct_kg`` over the new
-    ontology under the SAME frozen models — row-identical to the
-    incremental leg by the gate-checked invariant; only the physical
-    plan differs."""
-    import dataclasses
-
-    if cfg.mapper != Mapper.TFIDF:
-        # the incremental side pins the exact syntactic plan
-        # (slice-dependent prefilter candidates); the valve must
-        # produce the identical relation
-        cfg = dataclasses.replace(cfg, candidate_prefilter=False)
-    if cfg.mapper == Mapper.TFIDF and cfg.use_inverted_index:
-        # the inverted plan has no index artifact: the frozen label-side
-        # model threads through map_terms_df instead (a kernel CSR index
-        # here would hit map_terms_df's loud incompatibility guard — and
-        # at the >4M-label dimensions this plan exists for, building one
-        # is exactly the memory blowup the plan avoids)
-        if tfidf_new_index is not None:
-            raise ValueError(
-                "incremental_kg_ontology: tfidf_new_index (broadcast-"
-                "kernel CSR) cannot be honored with use_inverted_index="
-                "True — drop the index, or unset use_inverted_index"
-            )
-        idx = None
-        frozen_target = tfidf_target_idf
-    else:
-        idx = (
-            (
-                tfidf_new_index
-                if tfidf_new_index is not None
-                else build_pipeline_index(
-                    new_onto_terms, cfg, target_idf=tfidf_target_idf
-                )
-            )
-            if cfg.mapper == Mapper.TFIDF
-            else None
+    """The corpus's mention projection for the ontology-release paths: the
+    persisted detection table when given, else ``detect_mentions`` over
+    the pages (their text column re-derived from the payload first when
+    ``reextract``)."""
+    if mentions_table is None:
+        mentions_table = detect_mentions(
+            extract_text(pages) if reextract else pages, langs=langs
         )
-        frozen_target = None  # already folded into the kernel index
-    if mentions_table is not None:
-        return construct_kg_from_mentions(
-            mentions_table, new_onto_terms, cfg,
-            tfidf_source_idf=tfidf_source_idf, tfidf_index=idx,
-            tfidf_target_idf=frozen_target,
-        )
-    return construct_kg(
-        pages, new_onto_terms, cfg,
-        langs=langs, reextract=reextract,
-        tfidf_source_idf=tfidf_source_idf,
-        tfidf_index=idx,
-        tfidf_target_idf=frozen_target,
-    )
+    return mentions_table.select("source_term_id", "source_term", "tags")
 
 
 def incremental_kg_ontology(
@@ -812,7 +755,7 @@ def incremental_kg_ontology(
     valve, two terms because the two cost regimes have different causes:
 
     - DIMENSION SIZE decides first (``rebuild_below_labels``, checked
-      BEFORE any probe work — a dimension-side label count only).
+      BEFORE any probe work — one limit-bounded label probe only).
       Per-mention kernel cost has a floor set by Arrow transfer +
       per-string n-gram work that a small dimension cannot reduce, so
       below ~40k labels the probe pass over the corpus costs nearly as
@@ -822,7 +765,7 @@ def incremental_kg_ontology(
       5k labels vs 2.21x at 200k; the log-interpolated crossover sits
       at ~37k labels, rounded to the 40_000 default. Below the
       threshold the valve dispatches straight to full rebuild without
-      paying the probe, so its worst case is rebuild + one label count.
+      paying the probe, so its worst case is rebuild + one label probe.
     - AFFECTED FRACTION decides second (``full_remap_fraction``). The
       fraction is DATA-dependent — a release whose added labels share
       the corpus's head vocabulary can legitimately affect most
@@ -844,64 +787,52 @@ def incremental_kg_ontology(
     contracts (same-config same-model index; detection output for this
     exact corpus).
     """
-    if full_remap_fraction is not None and rebuild_below_labels is not None:
-        # dimension term, BEFORE any probe work: validate exactly like the
-        # delta path would (identical errors on both sides of the valve),
-        # then one dimension-side label count
-        vcfg = _onto_release_cfg(cfg, tfidf_source_idf, tfidf_target_idf)
-        n_labels = _label_count(
+    # validated up front, exactly as the delta validates: identical errors
+    # and the identical plan on both sides of the valve
+    cfg = _onto_release_cfg(cfg, tfidf_source_idf, tfidf_target_idf)
+    mentions = _corpus_mentions(pages, mentions_table, langs, reextract)
+    # dimension term, BEFORE any probe work: one limit-bounded label probe
+    small_dimension = (
+        full_remap_fraction is not None
+        and rebuild_below_labels is not None
+        and not _has_labels(
             onto_labels_df(
                 filter_terms_df(
-                    new_onto_terms, vcfg.base_iris, vcfg.excl_deprecated,
-                    vcfg.term_type,
+                    new_onto_terms, cfg.base_iris, cfg.excl_deprecated,
+                    cfg.term_type,
                 )
-            )
+            ),
+            rebuild_below_labels,
         )
-        if n_labels < rebuild_below_labels:
-            return _onto_release_rebuild(
-                pages, new_onto_terms, vcfg,
-                tfidf_source_idf, tfidf_target_idf, tfidf_new_index,
-                mentions_table, langs, reextract,
+    )
+    if not small_dimension:
+        fresh, affected = incremental_kg_ontology_delta(
+            pages, prev_triples, prev_onto_terms, new_onto_terms, cfg,
+            tfidf_source_idf=tfidf_source_idf,
+            tfidf_target_idf=tfidf_target_idf,
+            tfidf_new_index=tfidf_new_index,
+            mentions_table=mentions,
+        )
+        # affected-fraction term (the affected set is persisted by the
+        # delta call)
+        if (
+            full_remap_fraction is None
+            or affected.count() <= full_remap_fraction * mentions.count()
+        ):
+            kept = prev_triples.join(
+                affected.withColumnRenamed("source_term_id", "subj"),
+                "subj",
+                "left_anti",
             )
-    fresh, affected = incremental_kg_ontology_delta(
-        pages, prev_triples, prev_onto_terms, new_onto_terms, cfg,
+            return kept.unionByName(fresh)
+    # the full-rebuild leg: the same frozen models, so row-identical to the
+    # incremental leg by the gate-checked invariant; only the plan differs
+    return construct_kg_from_mentions(
+        mentions, new_onto_terms, cfg,
         tfidf_source_idf=tfidf_source_idf,
+        tfidf_index=tfidf_new_index,
         tfidf_target_idf=tfidf_target_idf,
-        tfidf_new_index=tfidf_new_index,
-        mentions_table=mentions_table,
-        langs=langs, reextract=reextract,
     )
-    if full_remap_fraction is not None:
-        from ontology_mapper_spark.sources.pages import (
-            detect_mentions,
-            extract_text,
-        )
-
-        n_affected = affected.count()  # persisted by the delta call
-        if mentions_table is not None:
-            corpus_mentions = mentions_table
-        else:
-            # mirror the delta's own detection input: with reextract the
-            # text column must be (re)derived from the payload first — a
-            # raw-pages detect here would either fail (no text column) or
-            # count stale mentions, skewing the valve ratio (r4 ADVICE)
-            corpus_mentions = detect_mentions(
-                extract_text(pages) if reextract else pages, langs=langs
-            )
-        n_mentions = corpus_mentions.count()
-        if n_affected > full_remap_fraction * n_mentions:
-            return _onto_release_rebuild(
-                pages, new_onto_terms,
-                _onto_release_cfg(cfg, tfidf_source_idf, tfidf_target_idf),
-                tfidf_source_idf, tfidf_target_idf, tfidf_new_index,
-                mentions_table, langs, reextract,
-            )
-    kept = prev_triples.join(
-        affected.withColumnRenamed("source_term_id", "subj"),
-        "subj",
-        "left_anti",
-    )
-    return kept.unionByName(fresh)
 
 
 def incremental_kg_ontology_delta(
@@ -941,22 +872,16 @@ def incremental_kg_ontology_delta(
     orders of magnitude wider). Must be exactly the detection output for
     ``pages`` under the same ``langs`` (row-identity pinned by test);
     ``pages``/``reextract``/``langs`` are ignored for detection when it
-    is given."""
-    import dataclasses
+    is given.
 
-    from pyspark import StorageLevel
-
-    from ontology_mapper_spark.operators.tfidf import (
-        build_target_index,
-        tfidf_map_broadcast,
-    )
-    from ontology_mapper_spark.sources.pages import (
-        detect_mentions,
-        extract_text,
-    )
-
+    The re-map is one ``map_terms_df`` call: it chooses the TF-IDF plan
+    (kernel or inverted), folds the frozen label model into the new
+    index when none is supplied, and rejects a supplied index on the
+    inverted plan. Only the addition probe builds an index here — over
+    the added rows alone, delta-sized by construction, so it runs the
+    kernel on either plan (the two plans are output-identical by the
+    gate-pinned contract, so the affected set is plan-independent)."""
     cfg = _onto_release_cfg(cfg, tfidf_source_idf, tfidf_target_idf)
-    is_tfidf = cfg.mapper == Mapper.TFIDF
 
     prev_onto = filter_terms_df(
         prev_onto_terms, cfg.base_iris, cfg.excl_deprecated, cfg.term_type
@@ -968,23 +893,13 @@ def incremental_kg_ontology_delta(
         onto_labels_df(prev_onto), onto_labels_df(new_onto)
     )
 
-    if mentions_table is not None:
-        mentions = mentions_table.select(
-            "source_term_id", "source_term", "tags"
-        )
-    else:
-        if reextract:
-            pages = extract_text(pages)
-        mentions = detect_mentions(pages, langs=langs).select(
-            "source_term_id", "source_term", "tags"
-        )
+    mentions = _corpus_mentions(pages, mentions_table, langs, reextract)
     to_map = post.filter_ignored(mentions)
 
     # --- addition probe: all mentions vs an index of ONLY the added rows
-    sess = pages.sparkSession
     n_added = added.count()  # dimension-scale action (label EXCEPT only)
     if n_added:
-        if is_tfidf:
+        if cfg.mapper == Mapper.TFIDF:
             probe_idx = build_target_index(
                 added, cfg.ngram_length, target_idf=tfidf_target_idf
             )
@@ -1020,7 +935,9 @@ def incremental_kg_ontology_delta(
             .select("source_term_id")
         )
     else:
-        touched_add = sess.createDataFrame([], "source_term_id string")
+        touched_add = mentions.sparkSession.createDataFrame(
+            [], "source_term_id string"
+        )
 
     # --- removal flag: prev output rows naming a removed label's IRI
     touched_rm = (
@@ -1044,52 +961,14 @@ def incremental_kg_ontology_delta(
     )
 
     # --- re-map ONLY affected mentions against the full new ontology
-    to_remap = mentions.join(affected, "source_term_id", "left_semi")
-    if is_tfidf and cfg.use_inverted_index:
-        # the >4M-label regime: no kernel CSR index exists for this plan
-        # (building one is the memory blowup the plan avoids; a supplied
-        # one hits map_terms_df's loud guard) — the frozen label model
-        # threads through directly. The addition PROBE above still runs
-        # the kernel: its index spans only the ADDED labels, delta-sized
-        # by construction, and the two plans are output-identical by the
-        # gate-pinned contract, so the affected set is plan-independent.
-        if tfidf_new_index is not None:
-            raise ValueError(
-                "incremental_kg_ontology_delta: tfidf_new_index "
-                "(broadcast-kernel CSR) cannot be honored with "
-                "use_inverted_index=True — drop the index, or unset "
-                "use_inverted_index"
-            )
-        mapped = map_terms_df(
-            to_remap, new_onto_terms, cfg,
-            tfidf_source_idf=tfidf_source_idf,
-            tfidf_target_idf=tfidf_target_idf,
-            tags_absent=True,
-        )
-    elif is_tfidf:
-        full_idx = (
-            tfidf_new_index
-            if tfidf_new_index is not None
-            else build_target_index(
-                onto_labels_df(new_onto), cfg.ngram_length,
-                target_idf=tfidf_target_idf,
-            )
-        )
-        mapped = map_terms_df(
-            to_remap, new_onto_terms, cfg,
-            tfidf_source_idf=tfidf_source_idf,
-            tags_absent=True, tfidf_index=full_idx,
-        )
-    else:
-        # pin the EXACT syntactic plan: the TF-IDF-prefiltered variant's
-        # candidate set depends on IDF fitted over its INPUT slice, so a
-        # remap over only the affected mentions could admit different
-        # candidates than a full-corpus run — the exact broadcast plan is
-        # per-pair pure, which is what the reuse proof requires
-        cfg_exact = dataclasses.replace(cfg, candidate_prefilter=False)
-        mapped = map_terms_df(
-            to_remap, new_onto_terms, cfg_exact, tags_absent=True
-        )
+    mapped = map_terms_df(
+        mentions.join(affected, "source_term_id", "left_semi"),
+        new_onto_terms, cfg,
+        tfidf_source_idf=tfidf_source_idf,
+        tfidf_target_idf=tfidf_target_idf,
+        tfidf_index=tfidf_new_index,
+        tags_absent=True,
+    )
     return mappings_to_triples(mapped), affected
 
 

@@ -19,9 +19,26 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ontology_mapper_spark.config import MappingConfig
-from ontology_mapper_spark.pipeline import construct_kg, release_pipeline_cache
+from ontology_mapper_spark.config import Mapper, MappingConfig
+from ontology_mapper_spark.pipeline import (
+    build_pipeline_index,
+    construct_kg,
+    incremental_kg_delta,
+    merge_digests,
+    release_pipeline_cache,
+)
 from ontology_mapper_spark.sources.pages import PAGES_SCHEMA
+
+
+def _stream_index(onto_terms: DataFrame, cfg: MappingConfig | None):
+    """The TF-IDF index every micro-batch of a stream shares, built once
+    at stream start — or None where the kernel plan is not the one that
+    runs: the index would be dead driver work for API / syntactic mappers
+    and is rejected by the inverted plan."""
+    effective = cfg or MappingConfig()
+    if effective.mapper == Mapper.TFIDF and not effective.use_inverted_index:
+        return build_pipeline_index(onto_terms, cfg)
+    return None
 
 
 def read_pages_stream(spark: SparkSession, input_dir: str,
@@ -48,19 +65,8 @@ def stream_pages_to_triples(
     micro-batch (build_pipeline_index) — rebuilding the dimension index
     per trigger would add a driver collect + vectorization to every batch
     for a value that only changes when the ontology snapshot does."""
-    from ontology_mapper_spark.config import Mapper
-    from ontology_mapper_spark.pipeline import build_pipeline_index
-
     stream = read_pages_stream(spark, input_dir)
-    # only the TF-IDF broadcast plan consumes the prebuilt index; building
-    # it for API mappers / the inverted-index plan would be dead driver
-    # work at stream start (r3 review)
-    effective = cfg or MappingConfig()
-    tfidf_index = (
-        build_pipeline_index(onto_terms, cfg)
-        if effective.mapper == Mapper.TFIDF and not effective.use_inverted_index
-        else None
-    )
+    tfidf_index = _stream_index(onto_terms, cfg)
     # same writer-side guard as stream_incremental_kg: never let epoch
     # dirs land next to legacy root part files (r5 advisor, medium)
     _raise_if_legacy(spark, out_dir)
@@ -234,13 +240,6 @@ def stream_incremental_kg(
     test."""
     from pyspark.sql import Window
 
-    from ontology_mapper_spark.config import Mapper
-    from ontology_mapper_spark.pipeline import (
-        build_pipeline_index,
-        incremental_kg_delta,
-        merge_digests,
-    )
-
     effective = cfg or MappingConfig()
     if effective.mapper == Mapper.TFIDF and tfidf_source_idf is None:
         raise ValueError(
@@ -250,12 +249,7 @@ def stream_incremental_kg(
             "operators.tfidf.source_idf_map over a reference corpus; "
             "persist with save_idf_model)"
         )
-    tfidf_index = (
-        build_pipeline_index(onto_terms, cfg)
-        if effective.mapper == Mapper.TFIDF
-        and not effective.use_inverted_index
-        else None
-    )
+    tfidf_index = _stream_index(onto_terms, cfg)
     # A stream restarted against an UNMIGRATED (root part-file) log would
     # write epoch=N subdirs NEXT TO the legacy files — a mixed layout
     # spark.read.parquet rejects ("conflicting directory structures"),

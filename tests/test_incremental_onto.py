@@ -446,16 +446,17 @@ def test_inverted_plan_release_both_legs(spark, state):
         tfidf_source_idf=src_idf, tfidf_target_idf=tgt_idf,
     )
     assert _key(reb) == _key(kernel_full)
-    # a kernel CSR index alongside the inverted flag still fails loudly
-    with pytest.raises(ValueError, match="use_inverted_index"):
-        incremental_kg_ontology(
-            pages, prev, v1, v2, icfg,
-            tfidf_source_idf=src_idf, tfidf_target_idf=tgt_idf,
-            tfidf_new_index=build_pipeline_index(
-                v2, cfg, target_idf=tgt_idf
-            ),
-            rebuild_below_labels=None,
-        )
+    # a kernel CSR index alongside the inverted flag still fails loudly,
+    # on the delta leg (valve off) and on the rebuild leg (valve on)
+    idx2 = build_pipeline_index(v2, cfg, target_idf=tgt_idf)
+    for rebuild_below in (None, 40_000):
+        with pytest.raises(ValueError, match="use_inverted_index"):
+            incremental_kg_ontology(
+                pages, prev, v1, v2, icfg,
+                tfidf_source_idf=src_idf, tfidf_target_idf=tgt_idf,
+                tfidf_new_index=idx2,
+                rebuild_below_labels=rebuild_below,
+            )
 
 
 @pytest.mark.spark

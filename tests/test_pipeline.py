@@ -340,6 +340,19 @@ def test_inverted_index_auto_fallback(spark, onto):
 
 
 @pytest.mark.spark
+def test_has_labels_boundary(spark):
+    """The size probe behind every dimension dispatch answers ``>= n``:
+    ``n=0`` is always true (the prefilter's ``prefilter_min_labels=0``
+    force relies on it) and a table of exactly n rows reaches n."""
+    from ontology_mapper_spark.pipeline import _has_labels
+
+    labels = spark.createDataFrame([("a",), ("b",), ("c",)], "name string")
+    assert [_has_labels(labels, n) for n in (0, 2, 3, 4)] == [
+        True, True, True, False,
+    ]
+
+
+@pytest.mark.spark
 def test_source_idf_pins_broadcast_plan_over_fallback(spark, onto):
     """r3 review: a caller-supplied whole-corpus IDF must pin the broadcast
     plan even past the inverted-index threshold — the inverted plan
