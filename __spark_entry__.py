@@ -850,7 +850,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def sssom_mappings(spark, sf):
         """The pages->mapping flow exported as SSSOM rows (the
         mapping-community interchange standard): registry-CURIE object
-        ids (native when/regexp projection — the fixture's EFO/OBO
+        ids (native CASE projection — the fixture's EFO/OBO
         prefixes resolve, exercising the CURIE path the demo-ontology
         pipeline_mappings query cannot), skos/semapv constants, 3dp
         confidence as exact milli ints. Oracle replays the CURIE rules

@@ -4,7 +4,7 @@ The reference calls bioregistry at runtime (``onto_utils.py:56-62``);
 bioregistry is a network-updated registry, so this engine snapshots the
 prefix map as a literal table (derived from the reference's own static
 ``ONTOLOGY_IRIS``, ``onto_utils.py:163-184``, plus the OBO PURL convention)
-and evaluates the projection as a native when/regexp chain — JVM-side,
+and projects with one CASE expression parsed from import-time SQL text —
 no UDF. Unknown IRIs yield "" exactly like the reference's failure path.
 """
 
@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from ontology_mapper_spark.functions.registry_snapshot import PREFIX_SNAPSHOT
 
 OBO_BASE_IRI = "http://purl.obolibrary.org/obo/"
 BIOPORTAL_BASE_IRI = "http://purl.bioontology.org/ontology/"
@@ -36,52 +38,50 @@ ONTOLOGY_IRIS = {
 }
 
 
-_OBO_RE = r"^https?://purl\.obolibrary\.org/obo/([A-Za-z][A-Za-z0-9]*)_([A-Za-z0-9.]+)$"
-_IDORG_RE = r"^https?://identifiers\.org/([A-Za-z][A-Za-z0-9._]*)[:/]([A-Za-z0-9._-]+)$"
+_OBO_RE = r"^https?://purl[.]obolibrary[.]org/obo/([A-Za-z][A-Za-z0-9]*)_([A-Za-z0-9.]+)$"
+_IDORG_RE = r"^https?://identifiers[.]org/([A-Za-z][A-Za-z0-9._]*)[:/]([A-Za-z0-9._-]+)$"
 _LOCAL_ID_RE = r"^[A-Za-z0-9._-]+$"
 
 
-def curie_from_iri_col(iri: Column) -> Column:
-    """bioregistry-shaped CURIE, uppercased; "" when unresolvable
-    (reference ``onto_utils.py:56-62``, ``term_mapping.py:39-42``).
+def _lit(s: str) -> str:
+    """SQL literal free of quotes and backslashes, so it reads the same under
+    either spark.sql.parser.escapedStringLiterals (the regexes use [.])."""
+    if "'" in s or "\\" in s:
+        raise ValueError(f"curie: {s!r} cannot be a plain SQL literal")
+    return f"'{s}'"
+
+
+def _curie_case(snapshot: list[tuple[str, str]]) -> str:
+    """CASE text over the column placeholder ``{iri}``, rules in order: null
+    or empty, OBO PURL, snapshot rows longest-prefix-first, identifiers.org."""
+
+    def generic(rx: str) -> str:
+        g = [f"regexp_extract({{iri}}, {_lit(rx)}, {i})" for i in range(3)]
+        return f"WHEN {g[0]} != '' THEN upper(concat_ws(':', {g[1]}, {g[2]}))"
+
+    whens = ["WHEN {iri} IS NULL OR {iri} = '' THEN ''", generic(_OBO_RE)]
+    for iri_prefix, curie_prefix in sorted(snapshot, key=lambda r: -len(r[0])):
+        local = f"substring({{iri}}, {len(iri_prefix) + 1}, 2048)"
+        curie = f"upper(concat({_lit(curie_prefix + ':')}, {local}))"
+        whens.append(f"WHEN startswith({{iri}}, {_lit(iri_prefix)}) AND {local} "
+                     f"RLIKE {_lit(_LOCAL_ID_RE)} THEN {curie}")
+    return f"CASE {' '.join(whens + [generic(_IDORG_RE)])} ELSE '' END"
+
+
+_CURIE_CASE = _curie_case(PREFIX_SNAPSHOT)
+
+
+def curie_from_iri_col(iri: str) -> Column:
+    """bioregistry-shaped CURIE of column ``iri``, uppercased; "" when
+    unresolvable (reference ``onto_utils.py:56-62``, ``term_mapping.py:39-42``).
 
     Table-driven from ``registry_snapshot``: two *generic* rules cover the
     pattern-shaped registries (every OBO Foundry PURL — several hundred
-    prefixes — and identifiers.org), then ``PREFIX_SNAPSHOT`` enumerates
-    opaque namespaces (BioPortal PURLs, SNOMED, MeSH, UMLS, Wikidata, ...)
-    longest-prefix-first. All native when/regexp expressions — no UDF, one
-    codegen'd projection."""
-    from ontology_mapper_spark.functions.registry_snapshot import PREFIX_SNAPSHOT
-
-    obo_curie = F.concat_ws(
-        ":",
-        F.regexp_extract(iri, _OBO_RE, 1),
-        F.regexp_extract(iri, _OBO_RE, 2),
-    )
-    expr = F.when(iri.isNull() | (iri == ""), F.lit(""))
-    expr = expr.when(
-        F.regexp_extract(iri, _OBO_RE, 0) != "", F.upper(obo_curie)
-    )
-    for iri_prefix, curie_prefix in sorted(
-        PREFIX_SNAPSHOT, key=lambda r: len(r[0]), reverse=True
-    ):
-        local = F.substring(iri, len(iri_prefix) + 1, 2048)
-        expr = expr.when(
-            iri.startswith(iri_prefix) & local.rlike(_LOCAL_ID_RE),
-            F.upper(F.concat(F.lit(curie_prefix + ":"), local)),
-        )
-    # generic identifiers.org fallback (after the specific snapshot rows)
-    expr = expr.when(
-        F.regexp_extract(iri, _IDORG_RE, 0) != "",
-        F.upper(
-            F.concat_ws(
-                ":",
-                F.regexp_extract(iri, _IDORG_RE, 1),
-                F.regexp_extract(iri, _IDORG_RE, 2),
-            )
-        ),
-    )
-    return expr.otherwise(F.lit(""))
+    prefixes — and identifiers.org), ``PREFIX_SNAPSHOT`` the opaque
+    namespaces (BioPortal PURLs, SNOMED, MeSH, UMLS, Wikidata, ...). One
+    ``F.expr`` parses the import-time CASE text JVM-side: one py4j round
+    trip, no UDF."""
+    return F.expr(_CURIE_CASE.replace("{iri}", f"`{iri}`"))
 
 
 def label_from_iri_col(iri: Column) -> Column:

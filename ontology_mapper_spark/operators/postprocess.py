@@ -85,7 +85,7 @@ def finalize(mappings: DataFrame) -> DataFrame:
         "source_term_id",
         "source_term",
         "mapped_term_label",
-        curie_from_iri_col(F.col("mapped_term_iri")).alias("mapped_term_curie"),
+        curie_from_iri_col("mapped_term_iri").alias("mapped_term_curie"),
         "mapped_term_iri",
         F.round(F.col("mapping_score").cast("double"), 3).alias("mapping_score"),
         F.coalesce(

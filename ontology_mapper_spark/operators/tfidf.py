@@ -388,26 +388,28 @@ def build_target_index(
     two passes (released on exit — unless the CALLER already persisted it,
     in which case their cache is left untouched)."""
     # Size probe and small-dimension collect in ONE job: a limit(K+1)
-    # collect both detects "above K labels" and, when the dimension is
-    # small (the common per-query case), already holds every row — the
+    # Arrow collect both detects "above K labels" and, when the dimension
+    # is small (the common per-query case), already holds every row — the
     # r5 shape paid a count() job plus a global-sort collect job for a
     # dimension that fits on the driver anyway. The LABEL_ORDER sort
-    # happens driver-side: Python string comparison is code-point order,
-    # identical to Spark's binary UTF8 ordering for valid UTF-8, so the
-    # label-id tie-break is unchanged (and still matches the oracle).
+    # happens driver-side: pandas orders object strings by Python
+    # comparison, code-point order, identical to Spark's binary UTF8
+    # ordering for valid UTF-8, so the label-id tie-break is unchanged (and
+    # still matches the oracle).
     lim = _DISTRIBUTED_INDEX_MIN_LABELS
-    rows = (
+    labels = (
         onto_labels.select("name", "iri", "display_label", "is_synonym")
         .limit(lim + 1)
-        .collect()
+        .toPandas()
     )
-    if len(rows) <= lim:
-        rows.sort(key=lambda r: (r["iri"], r["is_synonym"], r["name"]))
-        names = [r["name"] for r in rows]
+    if len(labels) <= lim:
+        labels = labels.sort_values(["iri", "is_synonym", "name"], ignore_index=True)
         return _TargetIndex(
-            _assemble_csr(*_label_postings(names, ngram_length, target_idf)),
-            np.array([r["iri"] for r in rows], dtype=object),
-            np.array([r["display_label"] for r in rows], dtype=object),
+            _assemble_csr(
+                *_label_postings(labels["name"].tolist(), ngram_length, target_idf)
+            ),
+            labels["iri"].to_numpy(dtype=object),
+            labels["display_label"].to_numpy(dtype=object),
             ngram_length,
         )
     n_labels = onto_labels.count()  # dimension-scale action (large path)

@@ -233,13 +233,13 @@ def to_sssom(
     justification: str = "semapv:LexicalMatching",
 ) -> DataFrame:
     """Mappings relation -> SSSOM rows. ``object_id`` is the registry
-    CURIE (native when/regexp projection, no UDF); an unresolvable IRI
+    CURIE (native CASE projection, no UDF); an unresolvable IRI
     falls back to the full IRI (SSSOM permits IRIs where no prefix is
     registered) rather than emitting an empty id. Unmapped rows (empty
     IRI) carry no SSSOM row. Map-side only — no shuffle."""
     from ontology_mapper_spark.functions.curie import curie_from_iri_col
 
-    curie = curie_from_iri_col(F.col("mapped_term_iri"))
+    curie = curie_from_iri_col("mapped_term_iri")
     return mappings.filter(F.col("mapped_term_iri") != "").select(
         F.col("source_term_id").alias("subject_id"),
         F.col("source_term").alias("subject_label"),

@@ -76,6 +76,8 @@ def test_stream_matches_batch(spark, tmp_path, cache_entries):
 
     pages = synthesize_pages(spark, 120).cache()
     pages.write.mode("overwrite").parquet(in_dir)
+    # an earlier test's pipeline pin would be evicted by the runs below
+    release_pipeline_cache(spark)
     before = cache_entries()
 
     q = stream_pages_to_triples(spark, in_dir, out_dir, ckpt, onto, cfg)
