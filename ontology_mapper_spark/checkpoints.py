@@ -245,33 +245,35 @@ class CheckpointedRun:
                 "returning from build_fn"
             )
         out = built.cache()
-        rows_out = out.count()
-        out.write.mode("overwrite").parquet(
-            os.path.join(self.data_dir, f"bucket={b}")
-        )
-        if score_col in out.columns:
-            # decile bin computed from the milli-rounded score (integer
-            # arithmetic after one round): floor(raw_score * 10) would sit
-            # a last-ulp summation-order difference away from flipping at
-            # decile boundaries across engines/partitionings; the 3dp
-            # resolution is the one the hash-exact score_milli gates
-            # already prove stable
-            milli = F.round(F.col(score_col) * 1000).cast("long")
-            (
-                out.groupBy(
-                    F.least(
-                        F.floor(milli / F.lit(100.0)).cast("long"), F.lit(9)
-                    ).alias("bin")
-                )
-                # the bucket=N directory IS the bucket column (partition
-                # discovery surfaces it on read) — also storing a literal
-                # copy in the files made every read of the parent dir warn
-                # COLUMN_ALREADY_EXISTS
-                .agg(F.count(F.lit(1)).alias("n"))
-                .write.mode("overwrite")
-                .parquet(os.path.join(self.metrics_dir, f"bucket={b}"))
+        try:
+            rows_out = out.count()
+            out.write.mode("overwrite").parquet(
+                os.path.join(self.data_dir, f"bucket={b}")
             )
-        out.unpersist()
+            if score_col in out.columns:
+                # decile bin computed from the milli-rounded score (integer
+                # arithmetic after one round): floor(raw_score * 10) would sit
+                # a last-ulp summation-order difference away from flipping at
+                # decile boundaries across engines/partitionings; the 3dp
+                # resolution is the one the hash-exact score_milli gates
+                # already prove stable
+                milli = F.round(F.col(score_col) * 1000).cast("long")
+                (
+                    out.groupBy(
+                        F.least(
+                            F.floor(milli / F.lit(100.0)).cast("long"), F.lit(9)
+                        ).alias("bin")
+                    )
+                    # the bucket=N directory IS the bucket column (partition
+                    # discovery surfaces it on read) — also storing a literal
+                    # copy in the files made every read of the parent dir warn
+                    # COLUMN_ALREADY_EXISTS
+                    .agg(F.count(F.lit(1)).alias("n"))
+                    .write.mode("overwrite")
+                    .parquet(os.path.join(self.metrics_dir, f"bucket={b}"))
+                )
+        finally:
+            out.unpersist()
         self._record_lineage(b, rows_in, rows_out, time.time() - t0)
 
     def _record_lineage(

@@ -86,11 +86,11 @@ LABEL_ORDER = ("iri", "is_synonym", "name")
 # (iri, is_synonym, name) — labels/synonyms are set-valued upstream
 # (sources/owl.py label/synonym set union, U2/U3), so the tuple is a key.
 # Both plans treat each row as one TF-IDF document. Duplicated rows are
-# UNSUPPORTED input, not merely redundant: the index's Spark feeder
-# groups on the hashed tuple key (one document, doubled tf) while its
-# driver feeder enumerates each row as its own document — the two
-# feeders would diverge, so upstream set-union dedup is load-bearing for
-# the plan-equivalence guarantees.
+# UNSUPPORTED input, not merely redundant: the inverted plan's
+# ``target_postings_df`` groups on the hashed tuple key (one document,
+# doubled tf) while the kernel plan's index enumerates each row as its
+# own document — the kernel and inverted plans would diverge, so upstream
+# set-union dedup is load-bearing for the plan-equivalence guarantees.
 
 
 _COUNT_SENTINEL = "\x00__doc_count__"
@@ -243,8 +243,9 @@ def _label_postings(
 def _label_key_cols() -> tuple:
     """The 128-bit hashed label key (two independent xxhash64 columns)
     standing in for the (iri, is_synonym, name) tuple wherever a NARROW
-    join/aggregation key is needed. One definition shared by the inverted
-    plan and the index's Spark feeder so the keys always agree."""
+    join/aggregation key is needed. One definition for every use in the
+    inverted plan (``target_postings_df`` and the label join-back) so the
+    keys always agree."""
     return (
         F.xxhash64("iri", "is_synonym", "name").alias("lk1"),
         F.xxhash64("name", F.lit(-1640531527), "is_synonym", "iri").alias("lk2"),
@@ -290,9 +291,9 @@ def target_postings_df(
     """The ontology side vectorized AS A RELATION: per (label, ngram)
     l2-normalized tf-idf weight, labels identified by the hashed key pair.
     Pure DataFrame — every stage is a keyed aggregate or broadcast-idf
-    join, nothing single-task. Shared by ``tfidf_map_inverted_index``
-    (joined against the mention grams) and the Spark feeder of
-    ``build_target_index`` (collected via Arrow into ``_assemble_csr``).
+    join, nothing single-task. ``tfidf_map_inverted_index`` joins it
+    against the mention grams; ``_label_postings`` computes the same
+    statistic driver-side for the kernel's index.
 
     ``target_idf``: optional frozen model (see ``target_idf_map``) — the
     computed-IDF aggregate is replaced by a broadcast literal relation,
@@ -345,152 +346,34 @@ def target_postings_df(
     )
 
 
-# past this label count the driver feeder's single-threaded n-gramming of
-# every label (plus its Row collect) gives way to the Spark feeder, which
-# computes the same (label, gram, weight) rows as a relation in parallel
-# and collects them through Arrow. Both feed _assemble_csr, so the layout
-# is identical; weights may differ by ~1 ulp from JVM-vs-Python summation
-# order, absorbed by the kernel's 9dp rank rounding exactly like the
-# cross-engine oracle
-_DISTRIBUTED_INDEX_MIN_LABELS = 100_000
-
-
-def _parse_size(s: str) -> int:
-    """Spark size string ('1g', '512m', '2048', '1024k') -> bytes; 0 for
-    unlimited/unparseable (maxResultSize=0 means no limit)."""
-    try:
-        s = str(s).strip().lower()
-        mult = {"k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
-        if s and s[-1] in mult:
-            return int(float(s[:-1]) * mult[s[-1]])
-        if s.endswith("b") and len(s) >= 2 and s[-2] in mult:
-            return int(float(s[:-2]) * mult[s[-2]])
-        return int(s)
-    except (ValueError, IndexError):
-        return 0
-
-
 def build_target_index(
     onto_labels: DataFrame,
     ngram_length: int = 3,
     target_idf: tuple[dict[str, float], int] | None = None,
 ) -> _TargetIndex:
-    """Build the broadcastable CSR index (see ``_TargetIndex``). One
-    assembler, ``_assemble_csr``, cuts the posting spans from (label id,
-    gram, weight) rows, which come from one of two feeders: up to
-    ``_DISTRIBUTED_INDEX_MIN_LABELS`` labels the driver feeder
-    (``_label_postings``) n-grams the collected names; past it the Spark
-    feeder computes the rows as the ``target_postings_df`` relation. The
-    large path pre-flights BOTH driver collects against
-    spark.driver.maxResultSize BEFORE any collect runs (a mid-collect
-    rejection after the full upstream has executed is the opaque failure
-    this guard exists to replace), persists the label relation across its
-    two passes (released on exit — unless the CALLER already persisted it,
-    in which case their cache is left untouched)."""
-    # Size probe and small-dimension collect in ONE job: a limit(K+1)
-    # Arrow collect both detects "above K labels" and, when the dimension
-    # is small (the common per-query case), already holds every row — the
-    # r5 shape paid a count() job plus a global-sort collect job for a
-    # dimension that fits on the driver anyway. The LABEL_ORDER sort
-    # happens driver-side: pandas orders object strings by Python
-    # comparison, code-point order, identical to Spark's binary UTF8
-    # ordering for valid UTF-8, so the label-id tie-break is unchanged (and
-    # still matches the oracle).
-    lim = _DISTRIBUTED_INDEX_MIN_LABELS
+    """Build the broadcastable CSR index (see ``_TargetIndex``) at every
+    dimension size from one Arrow collect of the label attributes: the
+    driver feeder (``_label_postings``) n-grams the names and
+    ``_assemble_csr`` cuts the posting spans. Nothing is persisted, so a
+    cache the caller holds on ``onto_labels`` is left as it is. Past the
+    kernel's ceiling ``map_terms_df`` dispatches to the inverted plan,
+    which builds no index; a collect above spark.driver.maxResultSize
+    fails with Spark's own error naming that setting."""
+    # The LABEL_ORDER sort happens driver-side: pandas orders object
+    # strings by Python comparison, code-point order, identical to Spark's
+    # binary UTF8 ordering for valid UTF-8, so the label-id tie-break is
+    # the one the inverted plan and the oracle use.
     labels = (
         onto_labels.select("name", "iri", "display_label", "is_synonym")
-        .limit(lim + 1)
         .toPandas()
+        .sort_values(list(LABEL_ORDER), ignore_index=True)
     )
-    if len(labels) <= lim:
-        labels = labels.sort_values(["iri", "is_synonym", "name"], ignore_index=True)
-        return _TargetIndex(
-            _assemble_csr(
-                *_label_postings(labels["name"].tolist(), ngram_length, target_idf)
-            ),
-            labels["iri"].to_numpy(dtype=object),
-            labels["display_label"].to_numpy(dtype=object),
-            ngram_length,
-        )
-    n_labels = onto_labels.count()  # dimension-scale action (large path)
-    # Pre-flight: the attribute collect moves ~300 B/label and the
-    # postings collect ~24 posting rows x ~40 B per label (measured on the
-    # bench dimension) through driver task results, which
-    # spark.driver.maxResultSize caps (1 GiB stock; get_spark sets 4g).
-    # Raise only when the estimate exceeds the cap itself; warn inside a
-    # 20% margin (the estimate is approximate — a hard 0.8 cutoff would
-    # reject jobs that fit, r4 review round 2 finding #1).
-    spark = onto_labels.sparkSession
-    est_bytes = max(n_labels * 24 * 40, n_labels * 300)
-    max_rs = spark.conf.get("spark.driver.maxResultSize", "1g")
-    max_rs_bytes = _parse_size(max_rs)
-    if max_rs_bytes and est_bytes > max_rs_bytes:
-        raise ValueError(
-            f"build_target_index: collecting the index for {n_labels:,} "
-            f"labels needs ~{est_bytes / 2**20:.0f} MiB of driver task "
-            f"results, above spark.driver.maxResultSize={max_rs}. "
-            "Set spark.driver.maxResultSize (e.g. '8g') and size "
-            "spark.driver.memory accordingly, or keep the inverted plan "
-            "(cfg.use_inverted_index=True) for this dimension."
-        )
-    if max_rs_bytes and est_bytes > 0.8 * max_rs_bytes:
-        import warnings
-
-        warnings.warn(
-            f"build_target_index: estimated index collect "
-            f"(~{est_bytes / 2**20:.0f} MiB for {n_labels:,} labels) is "
-            f"within 20% of spark.driver.maxResultSize={max_rs}; consider "
-            "raising it.",
-            stacklevel=2,
-        )
-    # one lineage pass for the two collects below; respect a cache the
-    # caller already established (unpersisting it would silently drop
-    # their cache entry and force an upstream recompute on THEIR next use)
-    lvl = onto_labels.storageLevel
-    caller_persisted = lvl.useMemory or lvl.useDisk
-    if not caller_persisted:
-        onto_labels = onto_labels.persist()
-    try:
-        return _build_target_index_large(
-            onto_labels, ngram_length, target_idf=target_idf
-        )
-    finally:
-        if not caller_persisted:
-            try:
-                onto_labels.unpersist()
-            except Exception:
-                pass
-
-
-def _build_target_index_large(
-    onto_labels: DataFrame,
-    ngram_length: int,
-    target_idf: tuple[dict[str, float], int] | None = None,
-) -> _TargetIndex:
-    # ordered collect — Spark range-sorts in parallel and the driver
-    # receives partitions in order; no global row_number window needed
-    pdf = (
-        onto_labels.select(
-            "name", "iri", "display_label", "is_synonym", *_label_key_cols()
-        )
-        .orderBy(*LABEL_ORDER)
-        .toPandas()
-    )
-    post_pdf = target_postings_df(
-        onto_labels, ngram_length, target_idf=target_idf
-    ).toPandas()
-    key = pd.DataFrame(
-        {
-            "lk1": pdf["lk1"],
-            "lk2": pdf["lk2"],
-            "lid": np.arange(len(pdf), dtype=np.int64),
-        }
-    )
-    merged = post_pdf.merge(key, on=["lk1", "lk2"], how="inner")
     return _TargetIndex(
-        _assemble_csr(merged["lid"], merged["ngram"], merged["wt"]),
-        pdf["iri"].to_numpy(dtype=object),
-        pdf["display_label"].to_numpy(dtype=object),
+        _assemble_csr(
+            *_label_postings(labels["name"].tolist(), ngram_length, target_idf)
+        ),
+        labels["iri"].to_numpy(dtype=object),
+        labels["display_label"].to_numpy(dtype=object),
         ngram_length,
     )
 

@@ -8,8 +8,8 @@ Catalyst plans, but building them runs eager Spark jobs when a path needs a
 driver-side value: the TF-IDF ``source_idf_map`` collect (when no frozen
 IDF is passed), the limit-bounded label probes (``_has_labels``: the
 inverted-plan fallback, the syntactic prefilter and the release valve's
-dimension term) and the ``build_target_index`` collects (when no prebuilt
-index is passed); ``operators.graph.entity_cooccurrence`` adds an eager
+dimension term) and the one ``build_target_index`` Arrow collect of the
+label attributes (when no prebuilt index is passed); ``operators.graph.entity_cooccurrence`` adds an eager
 ``localCheckpoint``. The ontology side crosses driver→executor once,
 as a broadcast. Persisted intermediates are pinned per session
 (``session.pin``); ``release_pipeline_cache`` is the single release point.

@@ -33,7 +33,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # large-dimension index builds / dedup join-backs move >1 GiB of
         # task results; the stock 1g cap fails healthy jobs mid-collect
-        # (build_target_index also pre-flights against this value)
+        # (the index's label collect is ~300 B/label, ~1.2 GB at the
+        # kernel's 4M-label ceiling)
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

@@ -101,3 +101,21 @@ def test_run_bucketed_n_buckets_mismatch_raises(spark, tmp_path):
     # matching n_buckets processes everything
     run8 = CheckpointedRun(spark, str(tmp_path / "out8"), n_buckets=8)
     assert run8.run_bucketed(src, lambda df: df).count() == 200
+
+
+def test_run_bucket_releases_cache_when_build_fails(
+    spark, tmp_path, cache_entries
+):
+    """A build_fn whose output raises inside the bucket's first action must
+    not leave its cached output behind: the run releases it on the way
+    out, so the CacheManager returns to its baseline."""
+    src = str(tmp_path / "src")
+    rows = spark.createDataFrame([(f"u{i}", i) for i in range(4)], "url string, x int")
+    write_bucketed(rows, "url", src, n_buckets=1)
+    run = CheckpointedRun(spark, str(tmp_path / "out"), n_buckets=1)
+    boom = F.udf(lambda x: x // 0, "int")
+    before = cache_entries()
+    with pytest.raises(Exception, match="ZeroDivisionError"):
+        run.run_bucketed(src, lambda df: df.withColumn("y", boom("x")))
+    assert cache_entries() == before
+    assert run.completed_buckets() == set()

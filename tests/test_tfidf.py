@@ -148,18 +148,13 @@ def test_high_threshold_yields_exact_match_only(spark):
 
 
 @pytest.mark.spark
-def test_distributed_index_builder_equivalent(spark, monkeypatch):
-    """Both feeders of the one CSR assembler — the driver feeder (small
-    dimensions) and the Spark feeder (past _DISTRIBUTED_INDEX_MIN_LABELS)
-    — must build the same layout: the same gram -> row map, spans and
-    label ids, with weights within 1e-12 (JVM-vs-Python summation order).
-    The driver feeder's weights must equal the oracle's l2 tf-idf vectors.
-    Checked with the self-fit IDF and with a frozen target_idf_map model
-    fit on a subset (so some grams are unseen by it); the self-fit
-    indexes must also map identically at the engine's 9dp precision."""
+def test_target_index_matches_oracle_vectors(spark):
+    """The one index feeder: every posting of ``build_target_index`` must
+    equal the oracle's l2 tf-idf vector weight of its label, with nothing
+    missing or extra. Checked with the self-fit IDF and with a frozen
+    target_idf_map model fit on a subset (so some grams are unseen by it
+    and take ln(1 + n_model) + 1)."""
     import math
-
-    import numpy as np
 
     from ontology_mapper_spark.operators import tfidf as t
     from ontology_mapper_spark.oracle.tfidf_oracle import (
@@ -171,10 +166,6 @@ def test_distributed_index_builder_equivalent(spark, monkeypatch):
         filter_terms_df,
         fixture_onto_terms,
         onto_labels_df,
-    )
-    from ontology_mapper_spark.sources.pages import (
-        detect_mentions,
-        synthesize_pages,
     )
 
     labels = onto_labels_df(
@@ -188,37 +179,60 @@ def test_distributed_index_builder_equivalent(spark, monkeypatch):
     unseen = math.log(1.0 + n_model) + 1.0
     assert any(g not in idf_map for tf in tfs for g in tf)
 
-    def build_both(target_idf, idf):
-        idx_py = t.build_target_index(labels, target_idf=target_idf)
-        with monkeypatch.context() as m:
-            m.setattr(t, "_DISTRIBUTED_INDEX_MIN_LABELS", 1)
-            idx_dist = t.build_target_index(labels, target_idf=target_idf)
-        assert idx_dist.n_labels == idx_py.n_labels == len(names)
-        assert list(idx_dist.iris) == list(idx_py.iris)
-        assert idx_dist.gram_ids == idx_py.gram_ids
-        assert np.array_equal(idx_dist.indptr, idx_py.indptr)
-        assert np.array_equal(idx_dist.lids, idx_py.lids)
-        np.testing.assert_allclose(idx_dist.wts, idx_py.wts, rtol=0, atol=1e-12)
+    def check(target_idf, idf):
+        idx = t.build_target_index(labels, target_idf=target_idf)
+        assert idx.n_labels == len(names)
         vecs = [_l2_tfidf(tf, idf) for tf in tfs]
-        assert len(idx_py.lids) == sum(map(len, vecs))
-        for g, row in idx_py.gram_ids.items():
-            lo, hi = idx_py.indptr[row], idx_py.indptr[row + 1]
-            for lid, w in zip(idx_py.lids[lo:hi], idx_py.wts[lo:hi]):
+        assert len(idx.lids) == sum(map(len, vecs))
+        for g, row in idx.gram_ids.items():
+            lo, hi = idx.indptr[row], idx.indptr[row + 1]
+            for lid, w in zip(idx.lids[lo:hi], idx.wts[lo:hi]):
                 assert abs(vecs[lid][g] - w) < 1e-12, (g, lid)
-        return idx_py, idx_dist
 
-    build_both(frozen, {g: idf_map.get(g, unseen) for tf in tfs for g in tf})
-    idx_py, idx_dist = build_both(None, _idf(tfs))
-    mentions = detect_mentions(synthesize_pages(spark, 40)).select(
-        "source_term_id", "source_term"
+    check(frozen, {g: idf_map.get(g, unseen) for tf in tfs for g in tf})
+    check(None, _idf(tfs))
+
+
+@pytest.mark.spark
+def test_target_index_builds_in_one_job_and_persists_nothing(
+    spark, cache_entries
+):
+    """``build_target_index`` is one Arrow collect: one Spark job, no
+    relation of its own left in the CacheManager, and a cache the caller
+    holds on the labels is still held after the build."""
+    from ontology_mapper_spark.operators import tfidf as t
+    from ontology_mapper_spark.sources.ontology import (
+        filter_terms_df,
+        fixture_onto_terms,
+        onto_labels_df,
     )
-    cfg = MappingConfig()
-    a = t.tfidf_map_broadcast(mentions, labels, cfg, target_index=idx_py)
-    b = t.tfidf_map_broadcast(mentions, labels, cfg, target_index=idx_dist)
-    r9 = lambda df: sorted(
-        (*r[:-1], round(r[-1], 9)) for r in map(tuple, df.collect())
+
+    sc = spark.sparkContext
+    labels = onto_labels_df(
+        filter_terms_df(fixture_onto_terms(spark), term_type="class")
     )
-    assert r9(a) == r9(b)
+
+    def jobs_of_build(group):
+        sc.setJobGroup(group, "build_target_index")
+        try:
+            t.build_target_index(labels)
+        finally:
+            for key in ("jobGroup.id", "job.description", "job.interruptOnCancel"):
+                sc.setLocalProperty(f"spark.{key}", None)
+        # job events reach the status store through the async listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    before = cache_entries()
+    assert jobs_of_build("tindex-plain") == 1
+    assert cache_entries() == before
+    labels.persist()
+    try:
+        assert jobs_of_build("tindex-persisted") == 1
+        assert labels.storageLevel.useMemory
+        assert cache_entries() == before + 1
+    finally:
+        labels.unpersist()
 
 
 @pytest.mark.spark
@@ -263,39 +277,6 @@ def test_target_index_disk_cache_roundtrip(spark, tmp_path):
         pickle.dump(payload, f)
     with pytest.raises(ValueError, match="version"):
         t.load_target_index(path)
-
-
-def test_parse_size_spark_strings():
-    from ontology_mapper_spark.operators.tfidf import _parse_size
-
-    assert _parse_size("1g") == 2**30
-    assert _parse_size("512m") == 512 * 2**20
-    assert _parse_size("2048k") == 2048 * 2**10
-    assert _parse_size("4096") == 4096
-    assert _parse_size("1gb") == 2**30
-    assert _parse_size("0") == 0  # unlimited
-    assert _parse_size("garbage") == 0
-
-
-@pytest.mark.spark
-def test_distributed_index_preflights_max_result_size(spark, monkeypatch):
-    """r4 review finding #2: a dimension whose postings collect would
-    exceed spark.driver.maxResultSize must fail UP FRONT with the knob
-    named, not minutes in with an opaque SparkException."""
-    from ontology_mapper_spark.operators import tfidf as t
-    from ontology_mapper_spark.sources.ontology import (
-        filter_terms_df,
-        fixture_onto_terms,
-        onto_labels_df,
-    )
-
-    labels = onto_labels_df(
-        filter_terms_df(fixture_onto_terms(spark), term_type="class")
-    )
-    monkeypatch.setattr(t, "_DISTRIBUTED_INDEX_MIN_LABELS", 1)
-    monkeypatch.setattr(t, "_parse_size", lambda s: 10)  # pretend 10-byte cap
-    with pytest.raises(ValueError, match="maxResultSize"):
-        t.build_target_index(labels)
 
 
 def test_requests_transport_rejects_zero_retries():
