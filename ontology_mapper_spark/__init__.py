@@ -14,6 +14,7 @@ Public API (mirrors the reference's surface, ``t2t.py:31-34``):
                                 release KG maintenance (frozen models)
     page_digests / label_delta — the change-detection primitives
     release_pipeline_cache    — free the pipeline's persisted relations
+                                and scoring broadcasts
     cache_ontology / cache_ontology_set / cache_exists / clear_cache
     MappingConfig, Mapper, OntologyTermType
 """

@@ -36,6 +36,7 @@ from pyspark.sql import types as T
 from ontology_mapper_spark.config import MappingConfig
 from ontology_mapper_spark.functions.metrics import METRICS
 from ontology_mapper_spark.operators.tfidf import CANDIDATE_SCHEMA
+from ontology_mapper_spark.session import broadcast
 
 
 def _terms_with_names(onto_labels: DataFrame) -> list[tuple[str, str, list[str]]]:
@@ -62,7 +63,7 @@ def syntactic_map_broadcast(
         raise ValueError(f"Unsupported syntactic mapper: {cfg.mapper}")
     spark = mentions.sparkSession
     terms = _terms_with_names(onto_labels)
-    b_terms = spark.sparkContext.broadcast(terms)
+    b_terms = broadcast(spark, terms)
     metric_name = cfg.mapper
     max_mappings = cfg.max_mappings
 

@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ontology_mapper_spark.config import MappingConfig
+from ontology_mapper_spark.session import broadcast
 from ontology_mapper_spark.text.normalize import (
     char_wb_ngrams_col,
     char_wb_ngrams_py,
@@ -473,8 +474,8 @@ def tfidf_map_broadcast(
         if target_index is not None
         else build_target_index(onto_labels, cfg.ngram_length)
     )
-    b_idx = spark.sparkContext.broadcast(idx)
-    b_idf = spark.sparkContext.broadcast(src_idf)
+    b_idx = broadcast(spark, idx)
+    b_idf = broadcast(spark, src_idf)
     min_score, max_mappings, ntop, nlen = (
         cfg.min_score,
         cfg.max_mappings,

@@ -9,6 +9,7 @@ from __future__ import annotations
 import os
 
 from pyspark import StorageLevel
+from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -36,6 +37,23 @@ def get_spark(
         # (the index's label collect is ~300 B/label, ~1.2 GB at the
         # kernel's 4M-label ceiling)
         .config("spark.driver.maxResultSize", "4g")
+        # Spark evicts generated classes LRU once its cache holds
+        # maxEntries (default 100), and a kg_release pass alone compiles
+        # 136, so every pass of a long-lived session evicted and recompiled
+        # all of its own code (bigdim_link compiles 38, which fit). One
+        # round of the 50 gate queries (sf0.001, local[4]) compiles about
+        # 1,000 classes on a cold cache; a second round recompiled 1,276 at
+        # the default cap and 98 at 2000 (68 with the class-name setting
+        # below), with Metaspace 198 MB against 191 MB after two rounds.
+        # Static conf: it applies only to contexts this factory starts (a
+        # session attached to a running context keeps that context's cap),
+        # and on a cluster it reaches the executors through SparkConf.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # AQE numbers whole-stage codegen stages in the order it plans
+        # them, which follows which shuffle finished first; with the id in
+        # the class name, one stage's code got a new cache key, and a
+        # recompile, whenever that order changed between runs
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
@@ -82,11 +100,12 @@ def _prestart_python_workers(spark: SparkSession) -> None:
         pass
 
 
-# Persisted intermediates per session, by kind, oldest first: the one
-# owner of their lifetime. Keyed by the SparkSession object itself, so
-# sibling ``newSession()``s never share pins, and because the dict holds
-# the session, its ``id()`` cannot be recycled by a later session.
-_PINS: dict[SparkSession, dict[str, list[DataFrame]]] = {}
+# Persisted intermediates and broadcasts per session, by kind, oldest
+# first: the one owner of their lifetime. Keyed by the SparkSession object
+# itself, so sibling ``newSession()``s never share pins, and because the
+# dict holds the session, its ``id()`` cannot be recycled by a later
+# session.
+_PINS: dict[SparkSession, dict[str, list[DataFrame | Broadcast]]] = {}
 
 
 def pin(
@@ -101,27 +120,42 @@ def pin(
     afterwards would drop the new pin's cache entry too."""
     pins = _PINS.setdefault(df.sparkSession, {}).setdefault(kind, [])
     while len(pins) >= keep:
-        _unpersist_quietly(pins.pop(0))
+        _release_quietly(pins.pop(0))
     pins.append(df.persist(level))
     return df
 
 
+def broadcast(spark: SparkSession, value) -> Broadcast:
+    """Broadcast ``value`` and register it under ``spark`` until
+    ``release_pipeline_cache``, which destroys it and so deletes its
+    pickle from the driver's temp dir. Never evicted earlier: a plan
+    that reads a destroyed broadcast fails instead of recomputing."""
+    b = spark.sparkContext.broadcast(value)
+    _PINS.setdefault(spark, {}).setdefault("broadcasts", []).append(b)
+    return b
+
+
 def release_pipeline_cache(spark: SparkSession | None = None) -> None:
-    """Unpersist every relation the engine pinned for ``spark`` (every
-    session's when None) -- the single release point, to call after the
-    final action on a pipeline's or graph operator's output. Safe after
-    the session stopped."""
+    """Unpersist every relation and destroy every broadcast the engine
+    registered for ``spark`` (every session's when None) -- the single
+    release point, to call after the final action on a pipeline's or
+    graph operator's output. An output built before the release cannot
+    be acted on after it: its scoring broadcast is gone. Safe after the
+    session stopped."""
     sessions = list(_PINS) if spark is None else [spark]
     for sess in sessions:
         for pins in _PINS.pop(sess, {}).values():
-            for df in pins:
-                _unpersist_quietly(df)
+            for obj in pins:
+                _release_quietly(obj)
 
 
-def _unpersist_quietly(df: DataFrame) -> None:
-    # a stopped session has nothing left to unpersist; never let one dead
+def _release_quietly(obj: DataFrame | Broadcast) -> None:
+    # a stopped session has nothing left to release; never let one dead
     # pin abort releasing the rest
     try:
-        df.unpersist()
+        if isinstance(obj, Broadcast):
+            obj.destroy()
+        else:
+            obj.unpersist()
     except Exception:
         pass
